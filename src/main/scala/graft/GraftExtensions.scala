@@ -16,7 +16,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
+    // PushFilterThroughAsofJoin is not injected here: AsofJoin.asofJoin
+    // installs it through register, after the optimizer's own batches.
+    // Injected, it runs in the operator-optimization batch, where a
+    // pushed filter over a local relation is folded into the relation
+    // (AsofJoinSpec's pushdown law).
   }
 }
 
@@ -205,7 +209,7 @@ object GraftExtensions {
     * generate itself already skips empty arrays; the inferred filter buys
     * nothing here. Appended (not overwritten) to any user-excluded rules.
     */
-  private val ExcludedRule =
+  private[graft] val ExcludedRule =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
   def tune(spark: SparkSession): Unit = {

@@ -1,37 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name1,name2,...] — the
+  * optional third arg restricts the dump (and `oracle_sql.json`) to those
+  * queries, so `tools/compare.py` checks exactly the ones under
+  * development; the full gate passes exactly two args.
+  */
 object Verify {
+
+  /** The registry keys a run dumps: every key, or the comma-separated
+    * names in `filter`. An unknown or empty filter fails the run instead
+    * of writing an empty `oracle_sql.json` that compares as `0/0 passed`.
+    */
+  private[graft] def select(keys: Set[String], filter: Option[String]): Set[String] =
+    filter.fold(keys) { csv =>
+      val names = csv.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(keys)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+      require(names.nonEmpty, "empty query filter")
+      names
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir  = args(0)
     val outDir = args(1)
-    // optional third arg: comma-separated query-name filter (dev use;
-    // the driver always passes exactly two args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); read as Long, normalized
-      // to µs in Tables.events (matches DuckDB's ns→µs truncation).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: inferred isnotnull on heavy HOF join keys would
-      // recompute minhash/simhash folds inside the scan filter
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Maintenance.quietKnownWarnSpam()
+    val names  = select(SparkEntry.queries.keySet, args.lift(2))
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -51,7 +49,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The core OHLCV bar build — the reference's AGGREGATE_SQL
@@ -43,12 +43,6 @@ object BarAggregator {
         sum(coalesce(col("volume"), lit(0L))).as("volume_sum"),
         count(lit(1)).as("tick_count"))
   }
-
-  /** Half-open incremental window [from, to) — the aggregator's watermark
-    * scan bound (services/aggregator/aggregator.py:37,123-127).
-    */
-  def bars1mBetween(ticks: DataFrame, from: Column, to: Column): DataFrame =
-    bars1m(ticks.filter(col("event_time") >= from && col("event_time") < to))
 
   /** Skew-resistant two-stage variant: when one (symbol, minute) key is
     * hot (a meme-stock minute at 100 TB), the single-shuffle aggregate

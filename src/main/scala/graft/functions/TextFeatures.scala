@@ -85,18 +85,6 @@ object TextFeatures {
          |  hs -> transform(sequence(0, ${numHashes - 1}),
          |          p -> array_min(transform(hs, h -> xxhash64(p, h)))))[0]""".stripMargin)
 
-  /** [[minhashSignature]] over an already-hashed (array<bigint>) set.
-    * The input array is bound once to a lambda variable (single-element
-    * array + subscript) so a non-trivial upstream expression for the
-    * hashes column is evaluated once, not once per permutation.
-    */
-  def minhashSignatureFromHashes(hashesCol: String, numHashes: Int): Column =
-    expr(
-      s"""transform(
-         |  array($hashesCol),
-         |  hs -> transform(sequence(0, ${numHashes - 1}),
-         |          p -> array_min(transform(hs, h -> xxhash64(p, h)))))[0]""".stripMargin)
-
   /** LSH band keys: one xxhash64 per band over `rowsPerBand` consecutive
     * signature entries (banding via slice + hash of the slice). The
     * signature is bound once to a lambda variable so project collapse

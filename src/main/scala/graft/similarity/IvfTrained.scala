@@ -47,9 +47,10 @@ object IvfTrained {
     * width that clears the 0.7 composed-recall bar at the 10× scale.
     * The ~40% scan fraction is what honest recall costs on this
     * NEAR-ISOTROPIC corpus (routing's adversarial case — cf. the
-    * IvfArtifactProbe finding); on clustered real-world embeddings the
-    * same machinery reaches the bar at far smaller fractions, and the
-    * published sweep is the tuning surface production would use.
+    * query-as-centroid finding, PLANS.md:423); on clustered real-world
+    * embeddings the same machinery reaches the bar at far smaller
+    * fractions, and the published sweep is the tuning surface
+    * production would use.
     */
   private[graft] val NProbe = 8
 
@@ -60,7 +61,7 @@ object IvfTrained {
     *
     * @param queryPred picks the query side (registry default: the
     *   modulo rule; [[graft.tools.RecallProbe]] passes a SEED-DISJOINT
-    *   predicate per the IvfArtifactProbe measurement law, and pins
+    *   predicate per the PLANS.md:423 measurement law, and pins
     *   queries to the base id range at replica scales)
     */
   private[graft] def trainedMembersOn(emb: DataFrame, nprobe: Int = NProbe,

@@ -60,8 +60,8 @@ object JlProject {
     * binds `q` ONCE via the single-element-array idiom — referencing the
     * q column directly inside the (i, j) fold would re-inline the whole
     * quantization per multiply (the HOF project-collapse gotcha).
-    * `projDims` defaults to the registry's P=16; [[graft.tools.JlSweep]]
-    * sweeps it for the published distortion-vs-width surface.
+    * `projDims` defaults to the registry's P=16; PLANS.md:1857 holds the
+    * distortion-vs-width sweep over it.
     */
   private[graft] def projectedOn(emb: DataFrame,
       projDims: Int = ProjDims): DataFrame =

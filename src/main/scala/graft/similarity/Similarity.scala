@@ -176,7 +176,7 @@ object Similarity {
     * (C=391 modular vs C≈N/512 sqrt — a 10× cut of the assignment
     * stream, measured in ScaleProbe).
     *
-    * Recall honesty (round-9 finding, [[graft.tools.IvfArtifactProbe]]):
+    * Recall honesty (round-9 finding, receipt at PLANS.md:423):
     * this variant measures 0.335 recall@10 at sf0.1 vs `knn_ivf`'s
     * 0.925 — but the modular figure is largely a QUERY-AS-CENTROID
     * artifact (every query id %100 is also a centroid id %50, so each
@@ -191,7 +191,7 @@ object Similarity {
 
   /** @param nprobe probed buckets per query — the recall/scan-fraction
     *   tuning axis (the registry entry pins the oracle-checked default;
-    *   [[graft.tools.IvfArtifactProbe]] measures the recall curve).
+    *   PLANS.md:423 holds the measured recall curve).
     */
   def knnIvfSqrtOn(e: DataFrame, nprobe: Int = NProbe): DataFrame =
     knnIvfWith(e, sqrtCentroids(e), nprobe)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, ScaleProbe, Tables}
+import graft.{GraftExtensions, GraftSession, ScaleProbe, Tables}
 import graft.similarity.{IvfTrained, PqAnn}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +26,7 @@ object RecallProbe {
   /** The planted-cluster twin corpus (deterministic, hash-derived): 16
     * true clusters, vector = 0.9·unit-center + 0.436·unit-noise —
     * E[cos to own center] ≈ 0.9, within-cluster cosines 0.8+,
-    * cross-cluster ≈ 0. Shared with [[JlSweep]]'s clustered-geometry
-    * recall measurement.
+    * cross-cluster ≈ 0.
     */
   private[tools] def clusteredEmb(spark: SparkSession, n: Int, k: Int): DataFrame = {
     GraftExtensions.register(spark)
@@ -78,15 +77,7 @@ object RecallProbe {
       .split(",").map(_.trim.toInt).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val tmp   = if (args.length > 2) args(2) else "/tmp/scale_probe"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     // RECALL_GEOM=clustered swaps the corpus for a PLANTED-CLUSTER
     // geometry of the same size/shape (deterministic, hash-derived):
@@ -119,7 +110,7 @@ object RecallProbe {
           (spark.read.parquet(embPath),
             col("vec_id") % 100 === 0 && col("vec_id") < 10000000L)
         }
-      // SEED-DISJOINT query set (the IvfArtifactProbe measurement law):
+      // SEED-DISJOINT query set (the PLANS.md:423 measurement law):
       // id ≡ 10 (mod 100) never satisfies the kmeans seed rule
       // (id % 25 == 0), so no query contributed to centroid seeding —
       // the honest routing-recall view for the trained tier. Pinned to

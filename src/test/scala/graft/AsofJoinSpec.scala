@@ -13,7 +13,6 @@ class AsofJoinSpec extends SparkSpec {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   test("basic semantics: latest right row at or before left time, per key") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val quotes = Seq(
       ("A", ts("2024-01-01 10:00:00"), 100.0),
@@ -38,7 +37,6 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("exec node populates its SQLMetrics (output and matched rows)") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val quotes = Seq(("A", ts("2024-01-01 10:00:00"), 1.0)).toDF("symbol", "qt", "q")
     val trades = Seq(
@@ -64,7 +62,6 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("native operator matches the union+window composition on testdata") {
-    GraftExtensions.register(spark)
     val dir    = "/root/testdata/sf0.001"
     // normalize event_time to one timestamp type before rendering: the
     // native path carries the scan's TIMESTAMP_NTZ through, while the
@@ -80,7 +77,6 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("optimizer rule pushes left-only filters below the as-of join") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val l = Seq(("A", ts("2024-01-01 10:00:00"), 1L),
       ("B", ts("2024-01-01 10:00:00"), 2L)).toDF("symbol", "t", "v")
@@ -99,7 +95,6 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("null keys and times match nothing, without corrupting the merge") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val quotes = Seq(
       (Option("A"), Option(ts("2024-01-01 10:00:00")), 100.0),
@@ -118,7 +113,6 @@ class AsofJoinSpec extends SparkSpec {
   }
 
   test("plan shape: clustered exchanges + sorts, no cartesian") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val l = Seq(("A", ts("2024-01-01 10:00:00"), 1L)).toDF("symbol", "t", "v")
     val r = Seq(("A", ts("2024-01-01 09:00:00"), 2.0)).toDF("symbol", "rt", "x")

@@ -14,7 +14,6 @@ class BandStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("bucketed index join: corpus side exchange-free, candidates exact") {
-    GraftExtensions.register(spark)
     val sets = Dedup.hashedSets(Dedup.shingleSets(Tables.documents(spark, dir)))
     val bands = Dedup.bandIndex(sets).localCheckpoint() // one computation
     val isNew = col("doc_id") % 10 === 3

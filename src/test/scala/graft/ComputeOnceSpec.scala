@@ -17,7 +17,6 @@ import org.apache.spark.sql.functions._
 class ComputeOnceSpec extends SparkSpec {
 
   test("barrier is transparent: wrapped ≡ unwrapped values") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1L, 3L, 7L), Array(3L, 7L, 9L)),
       (Array(2L, 4L), Array(1L, 9L)), (Array.empty[Long], Array(1L)))
@@ -47,7 +46,6 @@ class ComputeOnceSpec extends SparkSpec {
   }
 
   test("verify shape evaluates the native loop once under the barrier") {
-    GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val out = graft.dedup.Dedup.dedupCosine(spark, dir)
     assert(out.collect().nonEmpty)
@@ -55,7 +53,6 @@ class ComputeOnceSpec extends SparkSpec {
   }
 
   test("jaccard verify: one jaccard_sorted evaluation in dedup_jaccard's plan") {
-    GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val out = graft.dedup.Dedup.dedupJaccard(spark, dir)
     assert(out.collect().nonEmpty)

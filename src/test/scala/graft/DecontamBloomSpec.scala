@@ -13,7 +13,6 @@ class DecontamBloomSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val (exact, bloom) = {
-    GraftExtensions.register(spark)
     val e = TextAnalytics.decontam(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = TextAnalytics.decontamBloom(spark, dir)

@@ -25,7 +25,6 @@ class DedupDeleteSpec extends SparkSpec {
     (id, (start until start + 30).map(i => s"tok$i").mkString(" "))
 
   test("served deletion ≡ from-scratch rebuild over survivors (sf0.001)") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, dir)
     val served = Dedup.dedupComponentsServedDel(spark, dir)
       .collect().map(_.toString).toSeq
@@ -43,7 +42,6 @@ class DedupDeleteSpec extends SparkSpec {
 
   test("deleting a bridge document splits its component") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     // 5-doc chain 1-2-4-6-7 (consecutive J≈0.867, others ≤0.75);
     // id 4 ≡ 4 (mod 9) is tombstoned — the bridge. From-scratch over
     // survivors: {1,2} and {6,7}.
@@ -60,7 +58,6 @@ class DedupDeleteSpec extends SparkSpec {
 
   test("a survivor orphaned by deletion drops out; untouched groups pass through") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     // pair (3, 13) with 13 tombstoned: 3 loses its only edge and must
     // vanish; pair (1, 2) is untouched and passes through (disjoint
     // token alphabets keep the two pairs unlinked)

@@ -24,7 +24,6 @@ class DedupEdgeIngestSpec extends SparkSpec {
       .toSet
 
   test("streamed edges ≡ one-shot MinHash dedup after every batch prefix; replay no-op; compaction identity") {
-    GraftExtensions.register(spark)
     val s = store("law")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
@@ -54,7 +53,6 @@ class DedupEdgeIngestSpec extends SparkSpec {
   }
 
   test("folded component map ≡ from-scratch over the landed union, every prefix; replay no-op") {
-    GraftExtensions.register(spark)
     val s = store("compmap")
     val compPath = s.edgesPath.stripSuffix("/edges") + "/components"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -87,7 +85,6 @@ class DedupEdgeIngestSpec extends SparkSpec {
   }
 
   test("tombstone-aware fold: every insert/delete interleave ≡ one-shot over survivors") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
       .localCheckpoint()
@@ -147,7 +144,6 @@ class DedupEdgeIngestSpec extends SparkSpec {
   }
 
   test("tombstone-applied compaction: survivor read identical, stores fold to survivors, horizon guards replay") {
-    GraftExtensions.register(spark)
     val s = store("tombcomp")
     val tombs = s.edgesPath.stripSuffix("/edges") + "/tombs"
     val compPath = s.edgesPath.stripSuffix("/edges") + "/componentsdel"
@@ -207,7 +203,6 @@ class DedupEdgeIngestSpec extends SparkSpec {
   }
 
   test("live(base prefix + delta) ≡ one-shot dedup, for every prefix split") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
       .localCheckpoint()

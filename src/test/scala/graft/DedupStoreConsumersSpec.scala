@@ -82,7 +82,6 @@ class DedupStoreConsumersSpec extends SparkSpec {
     // input (elements are never null), so band frames must be identical
     // — including for a corpus that CONTAINS an empty-token document.
     import spark.implicits._
-    GraftExtensions.register(spark)
     // raw (doc_id, sh) sets fed straight to hashedSets — including an
     // EMPTY set, the row the filter exists to drop (documents shorter
     // than the shingle width never reach bandIndex in the registry

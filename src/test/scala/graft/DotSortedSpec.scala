@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class DotSortedSpec extends SparkSpec {
 
   test("dot_sorted equals the reference map-intersection dot on random posting pairs") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val rng = new scala.util.Random(23)
     val rows = (1 to 200).map { i =>
@@ -33,7 +32,6 @@ class DotSortedSpec extends SparkSpec {
   }
 
   test("dot_sorted edge semantics: disjoint, empty, null") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1L, 2L), Array(5L, 5L), Array(3L, 4L), Array(7L, 7L)),  // disjoint → 0
@@ -46,7 +44,6 @@ class DotSortedSpec extends SparkSpec {
   }
 
   test("dot_sorted participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t)))) AS ks")
       .selectExpr("ks", "transform(ks, k -> 2L) AS cs")
@@ -61,7 +58,6 @@ class DotSortedSpec extends SparkSpec {
   }
 
   test("dot_sorted rejects wrong arity and non-bigint arrays at analysis time") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1L), Array(1L))).toDF("a", "b")
     val e1 = intercept[Exception](df.select(expr("dot_sorted(a, b)")).collect())

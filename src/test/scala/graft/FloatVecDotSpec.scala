@@ -19,7 +19,6 @@ class FloatVecDotSpec extends SparkSpec {
   }
 
   test("vec_dot equals the HOF fold bit-for-bit on random vectors") {
-    GraftExtensions.register(spark)
     val rows = vecs.select(
       expr("vec_dot(a, b)").as("fast"),
       expr("aggregate(zip_with(transform(a, x -> cast(x as double)), " +
@@ -33,7 +32,6 @@ class FloatVecDotSpec extends SparkSpec {
   }
 
   test("vec_dot participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     // plain parquet array columns: the projection stays codegen'd (HOF
     // lambdas like transform would fall back, a LocalTableScan never
     // enters codegen — this asserts vec_dot itself doesn't break a stage)
@@ -48,7 +46,6 @@ class FloatVecDotSpec extends SparkSpec {
   }
 
   test("vec_dot null and edge semantics") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1f, 2f), Array(3f, 4f)),
@@ -62,7 +59,6 @@ class FloatVecDotSpec extends SparkSpec {
   }
 
   test("vec_dot rejects non-float-array inputs at analysis time") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0))).toDF("a", "b")
     val e = intercept[Exception](df.select(expr("vec_dot(a, b)")).collect())

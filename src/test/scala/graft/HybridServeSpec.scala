@@ -18,7 +18,6 @@ class HybridServeSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("full-probe serving equals the per-batch exact entry bit-for-bit") {
-    GraftExtensions.register(spark)
     // nprobe >= K opens every trained cell: the routed member stream is
     // the full scan minus self, so any difference would be store/probe
     // plumbing loss, not the documented recall trade
@@ -31,7 +30,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("lexical probe: the postings-store side of the candidate join plans with zero exchange") {
-    GraftExtensions.register(spark)
     // force the store to exist, then probe it the way the serving leg does
     RetrievalAnalytics.hybridRrfServed(spark, dir).queryExecution.executedPlan
     val postings = spark.table(s"hybrid_postings_${graft.analytics.RetrievalAnalytics.storeKey(dir)}")
@@ -47,7 +45,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("vector probe: the cell scan is statically partition-pruned on centroid_id") {
-    GraftExtensions.register(spark)
     val served = RetrievalAnalytics.hybridRrfServed(spark, dir)
     val plan = served.queryExecution.executedPlan.toString
     // the probed-cell restriction must reach the store scan as a
@@ -59,7 +56,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("knn_served: bit-identical to the in-plan trained tier, partition-pruned cell scan") {
-    GraftExtensions.register(spark)
     val served = RetrievalAnalytics.knnServed(spark, dir)
     val plan = served.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*centroid_id".r.findFirstIn(plan).isDefined,
@@ -72,7 +68,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("vector freshness law: base store + delta generation at full probe == brute-force exact over the union") {
-    GraftExtensions.register(spark)
     val emb  = Tables.embeddings(spark, dir)
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 === 1)
@@ -96,7 +91,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("deletion law: base + delta - tombstones at full probe == brute force over the survivors") {
-    GraftExtensions.register(spark)
     val emb  = Tables.embeddings(spark, dir)
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 === 1)
@@ -117,7 +111,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("knn_served_del keeps the partition-pruned scan and never returns a tombstoned id") {
-    GraftExtensions.register(spark)
     val served = RetrievalAnalytics.knnServedDel(spark, dir)
     val plan = served.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*centroid_id".r.findFirstIn(plan).isDefined,
@@ -129,7 +122,6 @@ class HybridServeSpec extends SparkSpec {
   }
 
   test("store build is idempotent and the stores carry the documented layout") {
-    GraftExtensions.register(spark)
     RetrievalAnalytics.hybridRrfServed(spark, dir).queryExecution.executedPlan
     val key = graft.analytics.RetrievalAnalytics.storeKey(dir)
     val base = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft_hybrid_store/" + key

@@ -17,7 +17,6 @@ class IvfServedSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("knn_ivf_trained demotion: stored centroids + assignment ≡ in-plan retrain") {
-    GraftExtensions.register(spark)
     val stored = RetrievalAnalytics.knnIvfTrainedStored(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlan = IvfTrained.knnIvfTrained(spark, dir)
@@ -26,7 +25,6 @@ class IvfServedSpec extends SparkSpec {
   }
 
   test("knn_ivf_trained_sqrt demotion: sqrtcents/sqrtasg artifacts ≡ in-plan retrain") {
-    GraftExtensions.register(spark)
     val stored = RetrievalAnalytics.knnIvfTrainedSqrtStored(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlan = IvfTrained.knnIvfTrainedSqrt(spark, dir)

@@ -25,7 +25,6 @@ class JaccardSortedSpec extends SparkSpec {
   }
 
   test("jaccard_sorted equals the HOF intersect form bit-for-bit") {
-    GraftExtensions.register(spark)
     val rows = pairs.select(
       expr("jaccard_sorted(a, b)").as("fast"),
       TextFeatures.jaccard(col("a"), col("b")).as("slow"))
@@ -38,7 +37,6 @@ class JaccardSortedSpec extends SparkSpec {
   }
 
   test("jaccard_sorted edge semantics: identical, disjoint, empty, null") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1L, 2L, 3L), Array(1L, 2L, 3L)),   // identical → 1.0
@@ -64,7 +62,6 @@ class JaccardSortedSpec extends SparkSpec {
   }
 
   test("jaccard_sorted participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     // parquet-backed longs: xxhash64+sort then the merge, all in one stage
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("array_sort(transform(split(text, ' '), t -> xxhash64(t))) AS sh")
@@ -78,7 +75,6 @@ class JaccardSortedSpec extends SparkSpec {
   }
 
   test("jaccard_sorted rejects non-bigint-array inputs at analysis time") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0))).toDF("a", "b")
     val e = intercept[Exception](df.select(expr("jaccard_sorted(a, b)")).collect())

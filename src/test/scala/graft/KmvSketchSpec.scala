@@ -23,7 +23,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmin_distinct equals window-ranked distinct minima, any partitioning") {
-    GraftExtensions.register(spark)
     val df = stream
     val viaAgg = df.repartition(13)
       .groupBy("g").agg(expr("kmin_distinct(v, 50)").as("mins"))
@@ -39,7 +38,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("merge law: per-split sketches re-aggregated equal the one-pass sketch") {
-    GraftExtensions.register(spark)
     val df = stream.localCheckpoint()
     val onePass = df.groupBy("g").agg(expr("kmin_distinct(v, 64)").as("mins"))
       .collect().map(_.toString).sorted
@@ -54,7 +52,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("groups under k return the exact distinct set, ascending") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val out = Seq((1L, 5L), (1L, 3L), (1L, 5L), (1L, 9L))
       .toDF("g", "v")
@@ -64,7 +61,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("set algebra: component-sketch merge equals the direct union sketch") {
-    GraftExtensions.register(spark)
     // The kmv_overlap union rule — slice(sort(union(K(A), K(B))), 1, k) —
     // must equal kmin_distinct over the CONCATENATED stream (the subset
     // law: the k smallest of A ∪ B all appear in K(A) ∪ K(B)). k=50 on

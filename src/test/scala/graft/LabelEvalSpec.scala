@@ -115,7 +115,6 @@ class LabelEvalSpec extends SparkSpec {
     val e = emb(
       (0L to 7L).map(i => (i, 0, jit(a, 0.001f * (i + 1)))) ++
       (20L to 27L).map(i => (i, 1, jit(b, 0.001f * (i - 19)))): _*)
-    GraftExtensions.register(spark)
     val withN = e.select(col("vec_id"), col("label"), col("embedding").as("v"),
       expr("vec_dot(embedding, embedding)").as("n2"))
     val planted = LabelEval.knnLabelAccOn(withN)

@@ -60,7 +60,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("hilbertKeyNative == hilbertKey fold over the full grid + lineitem dims") {
-    GraftExtensions.register(spark)
     // exhaustive on a 64x64 grid…
     val g = grid(6)
       .withColumn("native", Layout.hilbertKeyNative("x", "y", 6))

@@ -123,7 +123,6 @@ class LinkIngestSpec extends SparkSpec {
   test("tombstone-applied compaction: composed reads identical, chains repaired to survivors, horizon guards replay") {
     import graft.dedup.Dedup
     import graft.streaming.DedupEdgeIngest
-    GraftExtensions.register(spark)
     val s = store("tombcomp")
     val base = s.edgesPath.stripSuffix("/edges")
     val entPath = base + "/entities"

@@ -17,7 +17,6 @@ class LinkStoreSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("incremental probe: index side exchange-free, pairs ≡ brute") {
-    GraftExtensions.register(spark)
     val sup = Tables.supplier(spark, dir)
     val keyed = Linkage.deletionKeyIndex(sup, "s_suppkey", "s_name")
       .localCheckpoint()
@@ -65,7 +64,6 @@ class LinkStoreSpec extends SparkSpec {
   }
 
   test("served graph entries ≡ in-plan twins bit-for-bit") {
-    GraftExtensions.register(spark)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
     assert(rows(Linkage.entityGroupsServed(spark, dir)) ==

@@ -190,7 +190,6 @@ class MaintenanceSpec extends SparkSpec {
 
   test("snapshot-chain compaction: read identical, replay intact, horizon enforced") {
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(spark)
     // a real fold chain: three ingest batches, component map folded per
     // batch — the store shape compactSnapshotChain exists for
     val base = java.nio.file.Files.createTempDirectory("snapchain").toString

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class MinHashSigSpec extends SparkSpec {
 
   test("minhash_sig: length k; set-order independence; min-of-union law") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq(10L, 20L, 30L)),
@@ -25,7 +24,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("empty and all-null sets have a null signature (no sentinel clique)") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Seq(10L)),
@@ -41,7 +39,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("identical sets collide in every LSH band; disjoint sets in none") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     import graft.functions.TextFeatures.lshBands
     val df = Seq(

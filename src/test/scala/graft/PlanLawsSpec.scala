@@ -88,7 +88,6 @@ class PlanLawsSpec extends SparkSpec {
     "knn_jl")
 
   private lazy val plans: Map[String, String] = {
-    GraftExtensions.register(spark)
     SparkEntry.queries.map { case (name, fn) =>
       name -> fn(spark, dir).queryExecution.explainString(ExplainMode.fromString("formatted"))
     }

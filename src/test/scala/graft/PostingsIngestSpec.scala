@@ -101,7 +101,6 @@ class PostingsIngestSpec extends SparkSpec {
   }
 
   test("live freshness law: base store on half the docs + delta tier on the rest == a full rebuild, bit-for-bit") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val emb  = Tables.embeddings(spark, dir)
     val st = freshStores()
@@ -122,7 +121,6 @@ class PostingsIngestSpec extends SparkSpec {
   }
 
   test("lexical deletion law: base + delta - tombstones == a rebuild on the survivors, bit-for-bit") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val emb  = Tables.embeddings(spark, dir)
     val st = freshStores()

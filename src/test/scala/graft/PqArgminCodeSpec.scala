@@ -12,7 +12,6 @@ class PqArgminCodeSpec extends SparkSpec {
   import spark.implicits._
 
   test("native argmin == join+min_by over the same frames, ties to the smaller code") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(7)
     val d = 4
     // vectors: 60 random int sub-vectors, plus duplicates of codebook
@@ -46,7 +45,6 @@ class PqArgminCodeSpec extends SparkSpec {
   }
 
   test("empty codebook yields null, not a crash") {
-    GraftExtensions.register(spark)
     val row = Seq((1L, Seq(1L, 2L))).toDF("vec_id", "qs")
       .select(expr(
         "pq_argmin_code(qs, cast(array() as array<struct<code: bigint, cv: array<bigint>>>))")

@@ -20,7 +20,6 @@ class PqBalancedSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("dim map: permutation, d dims per subspace, equal rank sums") {
-    GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val dm = PqAnn.balancedDimMap(emb, PqAnn.K256)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
@@ -40,7 +39,6 @@ class PqBalancedSpec extends SparkSpec {
   }
 
   test("knn_served_pq_balanced ≡ knn_pq256_balanced bit-for-bit") {
-    GraftExtensions.register(spark)
     val served = PqAnn.knnServedPqBalanced(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlan = PqAnn.knnPqBalancedOn(Tables.embeddings(spark, dir))
@@ -49,7 +47,6 @@ class PqBalancedSpec extends SparkSpec {
   }
 
   test("balanced entry keeps the knn_pq256 contract on the real corpus") {
-    GraftExtensions.register(spark)
     val out = PqAnn.knnPqBalancedOn(Tables.embeddings(spark, dir)).collect()
     val perQuery = out.groupBy(_.getLong(0))
     assert(perQuery.nonEmpty && perQuery.values.forall(_.length == 10))

@@ -22,7 +22,6 @@ class PqResServedSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("knn_served_pq_residual ≡ knn_ivf_pq_residual bit-for-bit; pruned scan") {
-    GraftExtensions.register(spark)
     val served = RetrievalAnalytics.knnServedPqResidual(spark, dir)
     val inPlan = PqAnn.knnIvfPqResidual(spark, dir)
     val s = served.collect().map(_.toString).toSeq
@@ -37,7 +36,6 @@ class PqResServedSpec extends SparkSpec {
   }
 
   test("decomposed tables ≡ monolithic tables: adj + Σ(bt+ct) = Σ(dt) per (query, member cell)") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     import graft.similarity.{IvfTrained, KMeansExact}
     val emb = Tables.embeddings(spark, dir)
@@ -81,7 +79,6 @@ class PqResServedSpec extends SparkSpec {
   }
 
   test("packed residual codes: 2 longs/vector, unpack ≡ enc") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, dir)
     val enc = PqAnn.pqResidualArtifacts(emb).enc

@@ -16,7 +16,6 @@ class PqServedSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("knn_served_pq ≡ knn_ivf_pq_rerank bit-for-bit; pruned 16 B scan") {
-    GraftExtensions.register(spark)
     val served = RetrievalAnalytics.knnServedPq(spark, dir)
     val inPlan = PqAnn.knnIvfPqRerank(spark, dir)
     val s = served.collect().map(_.toString).toSeq
@@ -35,7 +34,6 @@ class PqServedSpec extends SparkSpec {
   // ---- the r17 retrain demotions: stored-artifact forms ≡ in-plan -------
 
   test("knn_ivf_pq demotion: stored codes ≡ in-plan retrain, both routings") {
-    GraftExtensions.register(spark)
     val storedFix = RetrievalAnalytics.knnIvfPqStored(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlanFix = PqAnn.knnIvfPq(spark, dir)
@@ -51,7 +49,6 @@ class PqServedSpec extends SparkSpec {
   // ---- the r18 retrain-trio demotion: served K=256 forms ≡ in-plan -----
 
   test("knn_pq256 trio demotion: served flat ADC + rerank ≡ in-plan retrains") {
-    GraftExtensions.register(spark)
     val servedFlat = PqAnn.knnServedPq256(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlanFlat = PqAnn.knnPq256(spark, dir)
@@ -65,7 +62,6 @@ class PqServedSpec extends SparkSpec {
   }
 
   test("knn_ivf_pq_rerank_sqrt demotion: stored codes + stored √N routing ≡ in-plan") {
-    GraftExtensions.register(spark)
     val stored = RetrievalAnalytics.knnIvfPqRerankSqrtStored(spark, dir)
       .collect().map(_.toString).toSeq
     val inPlan = PqAnn.knnIvfPqRerankSqrt(spark, dir)
@@ -74,7 +70,6 @@ class PqServedSpec extends SparkSpec {
   }
 
   test("knn_served_pq_del: survivors only, queries filtered, empty batch ≡ base") {
-    GraftExtensions.register(spark)
     val del = RetrievalAnalytics.knnServedPqDel(spark, dir).collect()
     assert(del.nonEmpty)
     // the tombstone rule (vec_id ≡ 3 mod 7): no dead vector is returned
@@ -94,7 +89,6 @@ class PqServedSpec extends SparkSpec {
   }
 
   test("packed codes: 2 longs/vector, unpack ≡ enc") {
-    GraftExtensions.register(spark)
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, dir)
     val (enc, _) = PqAnn.pqArtifacts(emb)

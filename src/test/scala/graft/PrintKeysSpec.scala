@@ -23,6 +23,15 @@ class PrintKeysSpec extends AnyFunSuite {
     assert(PrintKeys.marked(Seq("x"), Map.empty) === Seq("x*"))
   }
 
+  test("Verify's name filter trims names and rejects unknown or empty ones") {
+    val keys = Set("a_query", "b_query", "c_query")
+    assert(Verify.select(keys, None) === keys)
+    assert(Verify.select(keys, Some(" a_query, c_query ,")) === Set("a_query", "c_query"))
+    val typo = intercept[IllegalArgumentException](Verify.select(keys, Some("a_query,a_qeury")))
+    assert(typo.getMessage.contains("a_qeury"))
+    intercept[IllegalArgumentException](Verify.select(keys, Some(" , ")))
+  }
+
   test("the REAL registry has no blank oracles (every query is gated)") {
     assert(PrintKeys.marked(SparkEntry.queries.keys, SparkEntry.oracleSql)
       .forall(!_.endsWith("*")))

@@ -28,7 +28,6 @@ class QuantizeSpec extends SparkSpec {
 
   test("knn_quantized: k exact-cosine-ranked rows per query off the int8 tier") {
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val out = Quantize.knnQuantized(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))

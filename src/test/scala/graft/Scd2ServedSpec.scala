@@ -14,7 +14,6 @@ class Scd2ServedSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("scd2_lookup_served ≡ scd2_lookup bit-for-bit; one events scan") {
-    GraftExtensions.register(spark)
     val served = StarAnalytics.scd2LookupServed(spark, dir)
     val inPlan = StarAnalytics.scd2Lookup(spark, dir)
     // plan law BEFORE any collect (an executed AQE plan prints initial +

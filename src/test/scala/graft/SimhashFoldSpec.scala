@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class SimhashFoldSpec extends SparkSpec {
 
   test("simhash_fold equals the HOF vote-fold formulation on random arrays") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(3)
     val rows = (1L to 50L).map(i =>
@@ -26,7 +25,6 @@ class SimhashFoldSpec extends SparkSpec {
   }
 
   test("empty and all-null inputs yield a null signature (no zero-sig clique)") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT simhash_fold(array(cast(null as bigint)), 48) AS a,
         |       simhash_fold(cast(array() as array<bigint>), 48) AS b,

@@ -31,7 +31,6 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("native expressions are reachable from SQL text over the training tables") {
-    GraftExtensions.register(spark)
     Tables.registerViews(spark, dir)
     // winnowing fingerprints + cosine scoring, written as a user would in
     // plain SQL — the registry makes the native tier a first-class

@@ -241,7 +241,6 @@ class TextAnalyticsSpec extends SparkSpec {
   test("weighted_sample: partitioning-independent, ranks by ln(u)/w with weight monotonicity") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    GraftExtensions.register(spark)
     val docs = (1L to 200L).map(i => (i, s"doc body $i", "xx", "s1", 10 + (i % 50)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val a = graft.analytics.TextAnalytics.weightedSampleOn(docs)

@@ -17,7 +17,6 @@ class TopKByScoreSpec extends SparkSpec {
   }
 
   test("topk_by_score equals window row_number top-k, any partitioning") {
-    GraftExtensions.register(spark)
     val df = scored
     val viaAgg = df.repartition(13) // force many partial buffers
       .groupBy("g").agg(expr("topk_by_score(score, id, 5)").as("top"))
@@ -33,7 +32,6 @@ class TopKByScoreSpec extends SparkSpec {
   }
 
   test("groups smaller than k return all rows, sorted") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val tiny = Seq((1L, 0.3, 10L), (1L, 0.9, 11L), (1L, 0.9, 9L))
       .toDF("g", "score", "id")

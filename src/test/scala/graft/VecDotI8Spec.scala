@@ -20,7 +20,6 @@ class VecDotI8Spec extends SparkSpec {
   }
 
   test("vec_dot_i8 equals the reference integer fold exactly") {
-    GraftExtensions.register(spark)
     val rows = vecs.select(
       col("a"), col("b"), expr("vec_dot_i8(a, b)").as("fast")).collect()
     rows.foreach { r =>
@@ -32,7 +31,6 @@ class VecDotI8Spec extends SparkSpec {
   }
 
   test("vec_dot_i8 participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     vecs.write.mode("overwrite").parquet("/tmp/graft_i8_spec")
     val df = spark.read.parquet("/tmp/graft_i8_spec")
       .selectExpr("vec_dot_i8(a, a) as n2")
@@ -46,7 +44,6 @@ class VecDotI8Spec extends SparkSpec {
   }
 
   test("vec_dot_i8 null and edge semantics mirror vec_dot") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Seq[Byte](1, 2), Seq[Byte](3, 4)),
@@ -60,7 +57,6 @@ class VecDotI8Spec extends SparkSpec {
   }
 
   test("vec_dot_i8 rejects non-tinyint-array inputs at analysis time") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq((Array(1f, 2f), Seq[Byte](1, 2))).toDF("a", "b")
     val e = intercept[Exception] {

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class VecSumSpec extends SparkSpec {
 
   test("element-wise sums match the driver computation across partial merges") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val rnd  = new scala.util.Random(9)
     val rows = (1 to 200).map(i => (i % 4, Array.fill(8)(rnd.nextFloat())))
@@ -22,7 +21,6 @@ class VecSumSpec extends SparkSpec {
   }
 
   test("null vectors are ignored; all-null group sums to null") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1, Some(Array(1f, 2f))),

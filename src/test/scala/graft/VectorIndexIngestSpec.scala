@@ -42,7 +42,6 @@ class VectorIndexIngestSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(stored.size == 500, s"index rows ${stored.size}")
     // assignment parity: the stored routing equals a direct batch argmax
-    GraftExtensions.register(spark)
     val cents = spark.read.parquet(s.centroidsPath)
       .select(col("centroid_id"), col("embedding").as("cv"),
         expr("vec_dot(embedding, embedding)").as("cn2"))
@@ -84,7 +83,6 @@ class VectorIndexIngestSpec extends SparkSpec {
     val res = VectorIndexIngest.search(spark, s, qv, nprobe = 3, topK = 10)
     // the probe set the router must have chosen: top-3 centroids by
     // cosine for this query (ties to the smaller id), computed directly
-    GraftExtensions.register(spark)
     val expectedProbes = spark.read.parquet(s.centroidsPath)
       .withColumn("qv", typedLit(qv))
       .withColumn("cosine", expr("vec_dot(qv, embedding)")
@@ -136,7 +134,6 @@ class VectorIndexIngestSpec extends SparkSpec {
     assert(stored.size == 500)
     assert(stored.values.toSet.size > 1, "all vectors routed to one trained cell")
     // assignment parity with the batch router over the SAME trained store
-    GraftExtensions.register(spark)
     val cents = spark.read.parquet(s.centroidsPath)
       .select(col("centroid_id"), col("embedding").as("cv"),
         expr("vec_dot(embedding, embedding)").as("cn2"))
@@ -182,7 +179,6 @@ class VectorIndexIngestSpec extends SparkSpec {
   }
 
   test("retrain loop: drift raises n_low, retrain + rebucket restore coverage and search") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // planted directions: clusters 0-3 are the ORIGINAL distribution,
     // 10-13 the drifted one (random 64-dim directions are ~orthogonal,

@@ -20,7 +20,6 @@ class WinnowFpSpec extends SparkSpec {
   }
 
   private def eval(text: String, k: Int = 8, w: Int = 4): Seq[Long] = {
-    GraftExtensions.register(spark)
     import spark.implicits._
     Seq(text).toDF("t").select(expr(s"winnow_fp(t, $k, $w)")).collect()
       .head.getSeq[Long](0).toSeq

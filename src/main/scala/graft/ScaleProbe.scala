@@ -320,7 +320,7 @@ object ScaleProbe {
           || wanted("dedup_components_live_steady")
           || wanted("dedup_components_served_inc")
           || wanted("dedup_components_served_incdel")) {
-        val key = graft.analytics.RetrievalAnalytics.storeKey(docsPath)
+        val key = graft.sources.StoreCatalog.key(spark, docsPath)
         Dedup.storedPairs(spark, key, docs).count() // build (or reuse) once
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         if (wanted("dedup_components_served"))
@@ -1059,7 +1059,7 @@ object ScaleProbe {
           bigEvents(Tables.events(spark, sfDir), copies)
             .repartition(par).write.mode("overwrite").parquet(evPath)
         val ev = spark.read.parquet(evPath)
-        val key = graft.analytics.RetrievalAnalytics.storeKey(evPath)
+        val key = graft.sources.StoreCatalog.key(spark, evPath)
         def served = graft.analytics.StarAnalytics
           .scd2LookupServedFrames(spark, key, ev)
         served.count() // builds the store; serve-only is the timed object
@@ -1077,7 +1077,7 @@ object ScaleProbe {
             .repartition(par).write.mode("overwrite").parquet(evPath)
         val ev = spark.read.parquet(evPath)
         def served = graft.analytics.StarAnalytics.scd2LookupLiveFrames(spark,
-          graft.analytics.RetrievalAnalytics.storeKey(evPath) + "_livebase", ev)
+          graft.sources.StoreCatalog.key(spark, evPath) + "_livebase", ev)
         served.count() // builds the base store; live read is the timed object
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         time(spark, copies, "scd2_lookup_live")(guard(served))
@@ -1102,7 +1102,7 @@ object ScaleProbe {
         val months = dimEv
           .select(date_trunc("month", col("ts")).as("m"))
           .distinct().orderBy("m").collect().map(_.get(0))
-        val key = graft.analytics.RetrievalAnalytics.storeKey(evPath) + "_xover"
+        val key = graft.sources.StoreCatalog.key(spark, evPath) + "_xover"
         def compose = graft.analytics.StarAnalytics.scd2LookupLiveCompose(
           spark, key, ev, dimEv, months)
         compose.count() // builds the base store; the read is the timed object
@@ -1115,7 +1115,7 @@ object ScaleProbe {
       // the timed serve reads Q·nprobe cells of 16 B/vector codes +
       // fetch·Q full vectors — queries pin to the base id range
       if (wanted("knn_served_pq")) {
-        val key = graft.analytics.RetrievalAnalytics.storeKey(embPath)
+        val key = graft.sources.StoreCatalog.key(spark, embPath)
         def served = graft.analytics.RetrievalAnalytics.knnServedPqFrames(
           spark, key, docs, spark.read.parquet(embPath),
           q => q % 100 === 0 && q < 10000000L)
@@ -1127,7 +1127,7 @@ object ScaleProbe {
       // untimed; the timed serve is knn_served_pq's pruned 16 B scan
       // plus one broadcast anti-join against the deletion batch
       if (wanted("knn_served_pq_del")) {
-        val key = graft.analytics.RetrievalAnalytics.storeKey(embPath)
+        val key = graft.sources.StoreCatalog.key(spark, embPath)
         val tomb = s"$tmp/pq_tombstones_$copies"
         spark.read.parquet(embPath)
           .filter(col("vec_id") % 7 === 3).select(col("vec_id").as("dead_id"))
@@ -1145,7 +1145,7 @@ object ScaleProbe {
       // scan over 16 B/vector codes with query tables riding the STORED
       // permutation — the "run it always" rule priced at serve time
       if (wanted("knn_served_pq_balanced")) {
-        val key = graft.analytics.RetrievalAnalytics.storeKey(embPath)
+        val key = graft.sources.StoreCatalog.key(spark, embPath)
         def served = graft.similarity.PqAnn.knnServedPqBalancedFrames(
           spark, key, spark.read.parquet(embPath),
           col("vec_id") % 100 === 0 && col("vec_id") < 10000000L)
@@ -1158,7 +1158,7 @@ object ScaleProbe {
       // the residual-specific per-(query, probed cell) tables — an
       // nprobe× larger but still query-bounded broadcast
       if (wanted("knn_served_pq_residual")) {
-        val key = graft.analytics.RetrievalAnalytics.storeKey(embPath)
+        val key = graft.sources.StoreCatalog.key(spark, embPath)
         def served = graft.analytics.RetrievalAnalytics.knnServedPqResidualFrames(
           spark, key, docs, spark.read.parquet(embPath),
           q => q % 100 === 0 && q < 10000000L)
@@ -1184,7 +1184,7 @@ object ScaleProbe {
           bigNames(Tables.customer(spark, sfDir), copies)
             .repartition(par).write.mode("overwrite").parquet(namesPath)
         val names = spark.read.parquet(namesPath)
-        val key = graft.analytics.RetrievalAnalytics.storeKey(namesPath)
+        val key = graft.sources.StoreCatalog.key(spark, namesPath)
         // build (or reuse) the store once, outside every timed pass
         graft.dedup.Linkage.storedEdges(spark, key, names, "id", "name").count()
         if (wanted("link_served_incremental"))
@@ -1593,7 +1593,7 @@ object ScaleProbe {
       if (wanted("phrase_search_served")) {
         def served = graft.analytics.RetrievalAnalytics
           .phraseSearchServedFrames(spark,
-            graft.analytics.RetrievalAnalytics.storeKey(docsPath), docs)
+            graft.sources.StoreCatalog.key(spark, docsPath), docs)
         served.count() // builds the store; serve-only is the timed object
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         time(spark, copies, "phrase_search_served")(guard(served))
@@ -1607,7 +1607,7 @@ object ScaleProbe {
       if (wanted("phrase_search_k_served")) {
         def served = graft.analytics.RetrievalAnalytics
           .phraseSearchKServedFrames(spark,
-            graft.analytics.RetrievalAnalytics.storeKey(docsPath), docs)
+            graft.sources.StoreCatalog.key(spark, docsPath), docs)
         served.count() // builds the positional store; serve is timed
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         time(spark, copies, "phrase_search_k_served")(guard(served))
@@ -1619,7 +1619,7 @@ object ScaleProbe {
       if (wanted("phrase_search_mixed")) {
         def served = graft.analytics.RetrievalAnalytics
           .phraseSearchMixedFrames(spark,
-            graft.analytics.RetrievalAnalytics.storeKey(docsPath), docs)
+            graft.sources.StoreCatalog.key(spark, docsPath), docs)
         served.count() // builds store + mixed query sets; serve is timed
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         time(spark, copies, "phrase_search_mixed")(guard(served))
@@ -1637,7 +1637,7 @@ object ScaleProbe {
           .withColumn("c", explode(sequence(lit(0), lit(copies - 1))))
           .select((col("vec_id_1") + col("c") * 10000000L).as("vec_id_1"),
             (col("vec_id_2") + col("c") * 10000000L).as("vec_id_2"))
-        val key = graft.analytics.RetrievalAnalytics.storeKey(embPath) + "_shard"
+        val key = graft.sources.StoreCatalog.key(spark, embPath) + "_shard"
         Similarity.storedEmbPairs(spark, key, emb, pairsOf = _ => shardPairs).count()
         Maintenance.releaseCachedBlocks(spark, blocking = true)
         time(spark, copies, "doc_pagerank_served")(

@@ -2,6 +2,7 @@ package graft.analytics
 
 import graft.Tables
 import graft.functions.TextFeatures._
+import graft.sources.StoreCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -400,60 +401,35 @@ object RetrievalAnalytics {
     * the BandStore law).
     */
   private val ServedBuckets = 8
-  private val buildLock = new Object
 
-  /** Collision-proof store key for a source directory: the sanitized
-    * name keeps keys readable, the appended CRC of the RAW string keeps
-    * distinct dirs distinct (sanitization alone maps e.g. `sf0.1` and
-    * `sf0_1` to the same key — the round-11 review's staleness hole).
-    */
-  private[graft] def storeKey(dir: String): String = {
-    val crc = new java.util.zip.CRC32
-    crc.update(dir.getBytes("UTF-8"))
-    dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + java.lang.Long.toHexString(crc.getValue)
-  }
-
-  /** Build-once-serve-many store resolution. CONTRACT: `key` names the
-    * corpus CONTENT — callers must derive it via [[storeKey]] (distinct
-    * dirs can never collide) or, for frame-based probe/spec callers,
-    * choose a key unique to the frames they pass; re-calling with the
-    * same key and different data serves the memoized store (by design —
-    * that is the serve economics), so mutate the key when the corpus
-    * changes.
+  /** Build-once resolution of the hybrid store for the corpus `key`
+    * names ([[StoreCatalog.key]] for a directory; probe and spec callers
+    * pass a key unique to their frames).
     */
   private def servedStores(spark: SparkSession, key: String,
-      docs: => DataFrame, emb: => DataFrame): graft.sources.HybridStore.Stores =
-    buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_hybrid_store", key)
-      val s = graft.sources.HybridStore.Stores(
-        s"hybrid_postings_$key", base + "/vectors", base + "/centroids")
-      // built = table registered AND both parquet writes COMMITTED (the
-      // StoreCatalog `_SUCCESS` rule — the previous bare directory-exists
-      // java.io checks were the stale-partial-cache class)
-      val built = spark.catalog.tableExists(s.postingsTable) &&
-        graft.sources.StoreCatalog.committed(spark, s.vectorsPath) &&
-        graft.sources.StoreCatalog.committed(spark, s.centroidsPath)
-      if (!built) {
-        graft.sources.StoreCatalog.sweepTable(spark, s.postingsTable)
-        val e = emb
-        // K-row trained centroid table: consumed by the assignment pass
-        // now and persisted for the query-side router
-        val cents = graft.similarity.KMeansExact.centroidsPacked(e).localCheckpoint()
-        val vectors = graft.similarity.Similarity.withNorms(e)
-          .join(graft.similarity.IvfTrained.assignOn(
-            graft.similarity.IvfTrained.scaledQuantized(e), cents), "vec_id")
-        graft.sources.HybridStore.write(
-          bm25ScoredOn(docs), vectors, cents, s, ServedBuckets)
-      }
-      s
+      docs: => DataFrame, emb: => DataFrame): graft.sources.HybridStore.Stores = {
+    val root = StoreCatalog.ensureBuilt(spark, "graft_hybrid_store", key) { root =>
+      val e = emb
+      // K-row trained centroid table: consumed by the assignment pass
+      // now and persisted for the query-side router
+      val cents = graft.similarity.KMeansExact.centroidsPacked(e).localCheckpoint()
+      val vectors = graft.similarity.Similarity.withNorms(e)
+        .join(graft.similarity.IvfTrained.assignOn(
+          graft.similarity.IvfTrained.scaledQuantized(e), cents), "vec_id")
+      graft.sources.HybridStore.write(bm25ScoredOn(docs), vectors, cents,
+        graft.sources.HybridStore.at(key, root, ServedBuckets))
     }
+    val s = graft.sources.HybridStore.at(key, root, ServedBuckets)
+    s.postings.attach(spark)
+    s
+  }
 
   def hybridRrfServed(spark: SparkSession, dir: String): DataFrame =
     hybridRrfServedOn(spark, dir, graft.similarity.IvfTrained.NProbe)
 
   private[graft] def hybridRrfServedOn(spark: SparkSession, dir: String,
                                        nprobe: Int): DataFrame =
-    hybridRrfServedFrames(spark, storeKey(dir),
+    hybridRrfServedFrames(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir), nprobe)
 
   /** Frame-based served entry (`ScaleProbe` feeds the replica corpus
@@ -469,7 +445,7 @@ object RetrievalAnalytics {
     val st = servedStores(spark, key, docs, emb)
     // lexical leg: query construction + candidate probe, both off the
     // postings store; the index side of the probe join never exchanges
-    val postings = spark.table(st.postingsTable)
+    val postings = spark.table(st.postings.name)
     val wq = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
     val qterms = postings.filter(queryIds(col("doc_id")))
       .withColumn("rn", row_number().over(wq))
@@ -546,7 +522,7 @@ object RetrievalAnalytics {
     def living(df: DataFrame, idCol: String): DataFrame = dead.fold(df)(d =>
       df.join(broadcast(d), col(idCol) === col("dead_id"), "left_anti"))
     val liveTf = living(
-      spark.table(st.postingsTable).select("doc_id", "term", "tc")
+      spark.table(st.postings.name).select("doc_id", "term", "tc")
         .unionByName(graft.streaming.PostingsIngest.mergedTf(spark, delta)),
       "doc_id")
     val scored = bm25ScoredOverTf(liveTf)
@@ -656,9 +632,9 @@ object RetrievalAnalytics {
     */
   def bm25SearchServed(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
-    val st = servedStores(spark, storeKey(dir),
+    val st = servedStores(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
-    val postings = spark.table(st.postingsTable)
+    val postings = spark.table(st.postings.name)
     val wq = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
     val qterms = postings.filter(col("doc_id") % 100 === 0)
       .withColumn("rn", row_number().over(wq))
@@ -706,7 +682,7 @@ object RetrievalAnalytics {
     */
   def knnServed(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
-    val st = servedStores(spark, storeKey(dir),
+    val st = servedStores(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
     val cents = spark.read.parquet(st.centroidsPath)
     val rawQ = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
@@ -745,6 +721,17 @@ object RetrievalAnalytics {
   private val DelMod = 7L
   private val DelRes = 3L
 
+  /** The deletion batch, landed once beside the index as its own store
+    * and read back — the serve path never sees the rule, only ids.
+    */
+  private def servedTombstones(spark: SparkSession, dir: String): DataFrame =
+    StoreCatalog.parquet(spark, "graft_hybrid_store",
+        StoreCatalog.key(spark, dir) + "_tombstones") {
+      Tables.embeddings(spark, dir)
+        .filter(col("vec_id") % DelMod === DelRes)
+        .select(col("vec_id").as("dead_id"))
+    }
+
   /** [[knnServed]] under DELETION — the missing half of the freshness
     * story (adds stream in as delta generations; deletes cannot, because
     * the vectors are already IN the immutable base store). The
@@ -767,24 +754,9 @@ object RetrievalAnalytics {
     */
   def knnServedDel(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
-    val st = servedStores(spark, storeKey(dir),
+    val st = servedStores(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
-    // the deletion batch lands beside the index (idempotent overwrite,
-    // the delta-generation contract) and is read back as a store — the
-    // serve path never sees the rule, only ids
-    val tombPath = st.vectorsPath + "_tombstones"
-    // write-once per rule key under the build lock (r15 ADVICE: the
-    // unguarded per-invocation overwrite raced concurrent readers)
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark,
-          Seq(s"$tombPath/batch_id=0")) {
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % DelMod === DelRes)
-          .select(col("vec_id").as("dead_id"))
-          .write.mode("overwrite").parquet(s"$tombPath/batch_id=0")
-      }
-    }
-    val dead = spark.read.parquet(tombPath).select("dead_id")
+    val dead = servedTombstones(spark, dir)
     val cents = spark.read.parquet(st.centroidsPath)
     val rawQ = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
       .join(broadcast(dead), col("vec_id") === col("dead_id"), "left_anti")
@@ -907,35 +879,26 @@ object RetrievalAnalytics {
     * so the oracle is shared too.
     */
   def phraseSearchServed(spark: SparkSession, dir: String): DataFrame =
-    phraseSearchServedFrames(spark, storeKey(dir), Tables.documents(spark, dir))
+    phraseSearchServedFrames(spark, StoreCatalog.key(spark, dir), Tables.documents(spark, dir))
 
   /** Frame-based served-phrase entry (`ScaleProbe` feeds replica corpora
-    * under their own store keys) — the `servedStores` memoization
-    * contract on `key`.
+    * under their own store keys).
     */
   private[graft] def phraseSearchServedFrames(spark: SparkSession, key: String,
       docs: => DataFrame): DataFrame = {
-    val (table, qPath) = buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_phrase_store", key)
-      val t = s"phrase_postings_$key"
-      val q = base + "/queries"
-      val built = spark.catalog.tableExists(t) &&
-        graft.sources.StoreCatalog.committed(spark, q)
-      if (!built) {
-        graft.sources.StoreCatalog.sweepTable(spark, t)
-        phraseTf(docs).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .bucketBy(ServedBuckets, "phrase").sortBy("phrase")
-          .format("parquet").saveAsTable(t)
-        // derive the query set from the just-landed table — the builder
-        // previously recomputed the corpus tf pass a second time here
-        spark.table(t).groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
-          .orderBy(col("cnt").desc, col("phrase").asc)
-          .limit(PhraseQueries).select(col("phrase"))
-          .coalesce(1).write.mode("overwrite").parquet(q)
-      }
-      (t, q)
+    def table(root: String) = StoreCatalog.Table(s"phrase_postings_$key",
+      root + "/postings", ServedBuckets, "phrase")
+    val root = StoreCatalog.ensureBuilt(spark, "graft_phrase_store", key) { root =>
+      table(root).write(phraseTf(docs))
+      // derive the query set from the just-landed table — the builder
+      // previously recomputed the corpus tf pass a second time here
+      spark.table(table(root).name).groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
+        .orderBy(col("cnt").desc, col("phrase").asc)
+        .limit(PhraseQueries).select(col("phrase"))
+        .coalesce(1).write.parquet(root + "/queries")
     }
-    phraseRank(spark.table(table), spark.read.parquet(qPath))
+    phraseRank(spark.table(table(root).attach(spark)),
+      spark.read.parquet(root + "/queries"))
   }
 
   val phraseSearchSql: String =
@@ -1059,27 +1022,30 @@ object RetrievalAnalytics {
     * aggregable, skew-bounded by the hottest term's list.
     */
   def phraseSearchKServed(spark: SparkSession, dir: String): DataFrame =
-    phraseSearchKServedFrames(spark, storeKey(dir), Tables.documents(spark, dir))
+    phraseSearchKServedFrames(spark, StoreCatalog.key(spark, dir), Tables.documents(spark, dir))
 
   /** Build-once resolution of the (doc, term, pos) positional-postings
     * catalog table — shared by EVERY phrase length (the store's whole
     * point): `phrase_search_k_served` and `phrase_search_mixed` probe
-    * the same table; only their query sets differ. The crash window is
-    * covered by the saveAsTable protocol (catalog registration commits
-    * after the write) plus the stale-location sweep for a build killed
-    * between location write and registration.
+    * the same table; only their query sets differ, and each query set is
+    * its own store ([[phraseQueryStore]]).
     */
   private def posPostingsTable(spark: SparkSession, key: String,
       docs: => DataFrame): String = {
-    val t = s"pos_postings_$key"
-    graft.sources.StoreCatalog.ensureTable(spark, t) {
-      positionalPostings(docs)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .bucketBy(ServedBuckets, "term").sortBy("term")
-        .format("parquet").saveAsTable(t)
-    }
-    t
+    def table(root: String) = StoreCatalog.Table(s"pos_postings_$key",
+      root + "/postings", ServedBuckets, "term")
+    val root = StoreCatalog.ensureBuilt(spark, "graft_pospost_store", key)(
+      root => table(root).write(positionalPostings(docs)))
+    table(root).attach(spark)
   }
+
+  /** A phrase query set (bounded: ≤ [[PhraseQueries]] rows per length),
+    * landed once per corpus key and `name`.
+    */
+  private def phraseQueryStore(spark: SparkSession, key: String, name: String)(
+      queries: => DataFrame): DataFrame =
+    StoreCatalog.parquet(spark, "graft_pospost_store", s"${key}_$name")(
+      queries.coalesce(1))
 
   /** Serve a query set from the positional store: bounded probe-term
     * collect (the nprobe contract, ≤ queries × k terms, pushed as an IN
@@ -1096,19 +1062,13 @@ object RetrievalAnalytics {
 
   private[graft] def phraseSearchKServedFrames(spark: SparkSession, key: String,
       docs: => DataFrame): DataFrame = {
-    val (table, qPath) = buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_pospost_store", key)
-      val t = posPostingsTable(spark, key, docs)
-      val q = base + "/queries"
-      if (!graft.sources.StoreCatalog.committed(spark, q))
-        phraseTfK(docs, PhraseKLen)
-          .groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
-          .orderBy(col("cnt").desc, col("phrase").asc)
-          .limit(PhraseQueries).select(col("phrase"))
-          .coalesce(1).write.mode("overwrite").parquet(q)
-      (t, q)
-    }
-    phraseServeFromStore(spark, table, spark.read.parquet(qPath))
+    val table = posPostingsTable(spark, key, docs)
+    phraseServeFromStore(spark, table, phraseQueryStore(spark, key, "queries") {
+      phraseTfK(docs, PhraseKLen)
+        .groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
+        .orderBy(col("cnt").desc, col("phrase").asc)
+        .limit(PhraseQueries).select(col("phrase"))
+    })
   }
 
   // ---- phrase_search_mixed: k = 2 AND k = 4 from the SAME store ---------
@@ -1133,25 +1093,19 @@ object RetrievalAnalytics {
     * does not).
     */
   def phraseSearchMixed(spark: SparkSession, dir: String): DataFrame =
-    phraseSearchMixedFrames(spark, storeKey(dir), Tables.documents(spark, dir))
+    phraseSearchMixedFrames(spark, StoreCatalog.key(spark, dir), Tables.documents(spark, dir))
 
   private[graft] def phraseSearchMixedFrames(spark: SparkSession, key: String,
       docs: => DataFrame): DataFrame = {
-    val (table, qPath) = buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_pospost_store", key)
-      val t = posPostingsTable(spark, key, docs)
-      val q = base + "/queries_mixed"
-      if (!graft.sources.StoreCatalog.committed(spark, q))
-        PhraseMixedKs.map(k =>
-            phraseTfK(docs, k)
-              .groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
-              .orderBy(col("cnt").desc, col("phrase").asc)
-              .limit(PhraseQueries).select(col("phrase")))
-          .reduce(_ unionByName _)
-          .coalesce(1).write.mode("overwrite").parquet(q)
-      (t, q)
-    }
-    phraseServeFromStore(spark, table, spark.read.parquet(qPath))
+    val table = posPostingsTable(spark, key, docs)
+    phraseServeFromStore(spark, table, phraseQueryStore(spark, key, "queries_mixed") {
+      PhraseMixedKs.map(k =>
+          phraseTfK(docs, k)
+            .groupBy(col("phrase")).agg(sum(col("tf")).as("cnt"))
+            .orderBy(col("cnt").desc, col("phrase").asc)
+            .limit(PhraseQueries).select(col("phrase")))
+        .reduce(_ unionByName _)
+    })
   }
 
   /** Oracle: per k the [[phraseSearchKSql]] chain (windows → tf → top
@@ -1215,34 +1169,29 @@ object RetrievalAnalytics {
     */
   private final case class PqStores(codesPath: String, codebookPath: String)
 
-  /** Build-once resolution of the PQ artifacts — [[servedStores]]'
-    * memoization contract (key names the corpus content). Packing is
+  /** Build-once resolution of the PQ artifacts for the corpus `key`
+    * names. Packing is
     * sum-of-disjoint-bitfields (each code occupies its own 8 bits, so
     * the group sum IS the bitwise OR; the top field may wrap the sign
     * bit, which `shiftrightunsigned` unpacking is immune to).
     */
   private def pqStores(spark: SparkSession, key: String,
-      st: graft.sources.HybridStore.Stores, emb: => DataFrame): PqStores =
-    buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_hybrid_store", key)
-      val s = PqStores(base + "/pqcodes", base + "/pqcodebook")
-      val built = graft.sources.StoreCatalog.committed(spark, s.codesPath) &&
-        graft.sources.StoreCatalog.committed(spark, s.codebookPath)
-      if (!built) {
-        val (enc, cb) = graft.similarity.PqAnn.pqArtifacts(emb)
-        val packed = enc.groupBy(col("vec_id")).agg(
-          sum(expr("if(sub < 8,  shiftleft(cast(code as bigint), 8 * sub), 0L)"))
-            .as("codes_lo"),
-          sum(expr("if(sub >= 8, shiftleft(cast(code as bigint), 8 * (sub - 8)), 0L)"))
-            .as("codes_hi"))
-        packed
-          .join(spark.read.parquet(st.vectorsPath).select("vec_id", "centroid_id"),
-            "vec_id")
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(s.codesPath)
-        cb.coalesce(1).write.mode("overwrite").parquet(s.codebookPath)
-      }
-      s
+      st: graft.sources.HybridStore.Stores, emb: => DataFrame): PqStores = {
+    val root = StoreCatalog.ensureBuilt(spark, "graft_pq_store", key) { root =>
+      val (enc, cb) = graft.similarity.PqAnn.pqArtifacts(emb)
+      val packed = enc.groupBy(col("vec_id")).agg(
+        sum(expr("if(sub < 8,  shiftleft(cast(code as bigint), 8 * sub), 0L)"))
+          .as("codes_lo"),
+        sum(expr("if(sub >= 8, shiftleft(cast(code as bigint), 8 * (sub - 8)), 0L)"))
+          .as("codes_hi"))
+      packed
+        .join(spark.read.parquet(st.vectorsPath).select("vec_id", "centroid_id"),
+          "vec_id")
+        .write.partitionBy("centroid_id").parquet(root + "/pqcodes")
+      cb.coalesce(1).write.parquet(root + "/pqcodebook")
     }
+    PqStores(root + "/pqcodes", root + "/pqcodebook")
+  }
 
   /** The persisted contiguous-K256 artifacts as (enc, codebook) frames —
     * the [[graft.similarity.PqAnn.knnServedPq256]] /
@@ -1254,7 +1203,7 @@ object RetrievalAnalytics {
     */
   private[graft] def pq256Artifacts(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val key = storeKey(dir)
+    val key = StoreCatalog.key(spark, dir)
     val st = servedStores(spark, key,
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
     val pq = pqStores(spark, key, st, Tables.embeddings(spark, dir))
@@ -1287,7 +1236,7 @@ object RetrievalAnalytics {
     * this entry exists to demonstrate.
     */
   def knnServedPq(spark: SparkSession, dir: String): DataFrame =
-    knnServedPqFrames(spark, storeKey(dir),
+    knnServedPqFrames(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
 
   /** Frame-based served-PQ entry (`ScaleProbe` feeds the replica corpus
@@ -1373,25 +1322,10 @@ object RetrievalAnalytics {
     * between index builds; partition pruning on the code store survives
     * (the anti-join sits above the pruned scan).
     */
-  def knnServedPqDel(spark: SparkSession, dir: String): DataFrame = {
-    val st = servedStores(spark, storeKey(dir),
-      Tables.documents(spark, dir), Tables.embeddings(spark, dir))
-    val tombPath = st.vectorsPath + "_tombstones"
-    // write-once per rule key under the build lock (r15 ADVICE: the
-    // unguarded per-invocation overwrite raced concurrent readers)
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark,
-          Seq(s"$tombPath/batch_id=0")) {
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % DelMod === DelRes)
-          .select(col("vec_id").as("dead_id"))
-          .write.mode("overwrite").parquet(s"$tombPath/batch_id=0")
-      }
-    }
-    knnServedPqFrames(spark, storeKey(dir),
+  def knnServedPqDel(spark: SparkSession, dir: String): DataFrame =
+    knnServedPqFrames(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir),
-      dead = Some(spark.read.parquet(tombPath).select("dead_id")))
-  }
+      dead = Some(servedTombstones(spark, dir)))
 
   // ---- knn_served_pq_residual: residual codes in the serving tier ------
 
@@ -1416,25 +1350,20 @@ object RetrievalAnalytics {
     * [[knnServed]]'s proven store law.
     */
   private def pqResStores(spark: SparkSession, key: String,
-      emb: => DataFrame): PqResStores =
-    buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_hybrid_store", key)
-      val s = PqResStores(base + "/pqrescodes", base + "/pqrescodebook")
-      val built = graft.sources.StoreCatalog.committed(spark, s.codesPath) &&
-        graft.sources.StoreCatalog.committed(spark, s.codebookPath)
-      if (!built) {
-        val a = graft.similarity.PqAnn.pqResidualArtifacts(emb)
-        a.enc.groupBy(col("vec_id")).agg(
-            sum(expr("if(sub < 8,  shiftleft(cast(code as bigint), 8 * sub), 0L)"))
-              .as("codes_lo"),
-            sum(expr("if(sub >= 8, shiftleft(cast(code as bigint), 8 * (sub - 8)), 0L)"))
-              .as("codes_hi"))
-          .join(a.asg, "vec_id")
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(s.codesPath)
-        a.codebook.coalesce(1).write.mode("overwrite").parquet(s.codebookPath)
-      }
-      s
+      emb: => DataFrame): PqResStores = {
+    val root = StoreCatalog.ensureBuilt(spark, "graft_pqres_store", key) { root =>
+      val a = graft.similarity.PqAnn.pqResidualArtifacts(emb)
+      a.enc.groupBy(col("vec_id")).agg(
+          sum(expr("if(sub < 8,  shiftleft(cast(code as bigint), 8 * sub), 0L)"))
+            .as("codes_lo"),
+          sum(expr("if(sub >= 8, shiftleft(cast(code as bigint), 8 * (sub - 8)), 0L)"))
+            .as("codes_hi"))
+        .join(a.asg, "vec_id")
+        .write.partitionBy("centroid_id").parquet(root + "/pqrescodes")
+      a.codebook.coalesce(1).write.parquet(root + "/pqrescodebook")
     }
+    PqResStores(root + "/pqrescodes", root + "/pqrescodebook")
+  }
 
   /** `knn_ivf_pq_residual`'s contract served from PERSISTED residual
     * codes — the r13 review's #7 ask: the residual tier's measured
@@ -1462,7 +1391,7 @@ object RetrievalAnalytics {
     * exactly why FAISS's IVFPQ encodes residuals by default.
     */
   def knnServedPqResidual(spark: SparkSession, dir: String): DataFrame =
-    knnServedPqResidualFrames(spark, storeKey(dir),
+    knnServedPqResidualFrames(spark, StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
 
   private[graft] def knnServedPqResidualFrames(spark: SparkSession, key: String,
@@ -1549,7 +1478,7 @@ object RetrievalAnalytics {
     graft.GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     graft.similarity.PqAnn.knnIvfPqOn(emb,
-      artifacts = Some(storedPqFrames(spark, storeKey(dir),
+      artifacts = Some(storedPqFrames(spark, StoreCatalog.key(spark, dir),
         Tables.documents(spark, dir), emb)))
   }
 
@@ -1561,7 +1490,7 @@ object RetrievalAnalytics {
     val emb = Tables.embeddings(spark, dir)
     graft.similarity.PqAnn.knnIvfPqOn(emb,
       membersOf = graft.similarity.Similarity.ivfMembersSqrtOn,
-      artifacts = Some(storedPqFrames(spark, storeKey(dir),
+      artifacts = Some(storedPqFrames(spark, StoreCatalog.key(spark, dir),
         Tables.documents(spark, dir), emb)))
   }
 
@@ -1570,28 +1499,22 @@ object RetrievalAnalytics {
     * the parquet round-trip is bit-exact) and the corpus assignment
     * against it — what lets `knn_ivf_pq_rerank_sqrt` serve without
     * re-running either the √N kmeans fit or the N·√N assignment pass
-    * per read. Build-once, `_SUCCESS`-gated, centroids before
-    * assignment (dependency order for crash re-runs).
+    * per read. Built once, as one store.
     */
   private final case class SqrtStores(centsPath: String, asgPath: String)
 
   private def sqrtStores(spark: SparkSession, key: String,
-      emb: => DataFrame): SqrtStores =
-    buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_hybrid_store", key)
-      val s = SqrtStores(base + "/sqrtcents", base + "/sqrtasg")
-      val built = graft.sources.StoreCatalog.committed(spark, s.centsPath) &&
-        graft.sources.StoreCatalog.committed(spark, s.asgPath)
-      if (!built) {
-        val c = graft.similarity.KMeansExact.centroidsPackedSqrt(emb)
-          .localCheckpoint() // consumers: the write + the assignment pass
-        c.coalesce(1).write.mode("overwrite").parquet(s.centsPath)
-        graft.similarity.IvfTrained
-          .assignOn(graft.similarity.IvfTrained.scaledQuantized(emb), c)
-          .write.mode("overwrite").parquet(s.asgPath)
-      }
-      s
+      emb: => DataFrame): SqrtStores = {
+    val root = StoreCatalog.ensureBuilt(spark, "graft_sqrt_store", key) { root =>
+      val c = graft.similarity.KMeansExact.centroidsPackedSqrt(emb)
+        .localCheckpoint() // consumers: the write + the assignment pass
+      c.coalesce(1).write.parquet(root + "/sqrtcents")
+      graft.similarity.IvfTrained
+        .assignOn(graft.similarity.IvfTrained.scaledQuantized(emb), c)
+        .write.parquet(root + "/sqrtasg")
     }
+    SqrtStores(root + "/sqrtcents", root + "/sqrtasg")
+  }
 
   /** √N-trained member pairs served from the persisted centroids +
     * assignment — row-identical to [[graft.similarity.IvfTrained
@@ -1625,7 +1548,7 @@ object RetrievalAnalytics {
   def knnIvfTrainedStored(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, dir)
-    val st = servedStores(spark, storeKey(dir), Tables.documents(spark, dir), emb)
+    val st = servedStores(spark, StoreCatalog.key(spark, dir), Tables.documents(spark, dir), emb)
     val cents = spark.read.parquet(st.centroidsPath)
     val members = graft.similarity.IvfTrained
       .probesOn(graft.similarity.IvfTrained.scaledQuantized(
@@ -1650,7 +1573,7 @@ object RetrievalAnalytics {
     val emb = Tables.embeddings(spark, dir)
     graft.similarity.Similarity.scoreMembers(
       graft.similarity.Similarity.withNorms(emb),
-      storedSqrtMembers(spark, storeKey(dir), emb,
+      storedSqrtMembers(spark, StoreCatalog.key(spark, dir), emb,
         col("vec_id") % graft.similarity.IvfTrained.QueryMod === 0))
   }
 
@@ -1665,7 +1588,7 @@ object RetrievalAnalytics {
   def knnIvfPqRerankSqrtStored(spark: SparkSession, dir: String): DataFrame = {
     graft.GraftExtensions.register(spark)
     val emb = Tables.embeddings(spark, dir)
-    val key = storeKey(dir)
+    val key = StoreCatalog.key(spark, dir)
     graft.similarity.PqAnn.knnIvfPqRerankOn(emb,
       membersOf = (e, qp) => storedSqrtMembers(spark, key, e, qp),
       fetch = graft.similarity.PqAnn.IvfRerankFetch,

@@ -949,7 +949,7 @@ object StarAnalytics {
     * maintained dimension store instead of rebuilding the interval
     * dimension in-plan per run — the serving-economics precedent
     * (`knn_served` vs `knn_ivf_trained`) applied to the warehouse tier,
-    * the r12 review's #2 ask. Build (memoized per corpus key): the
+    * the r12 review's #2 ask. Build (once per corpus key): the
     * non-purchase event stream is replayed through
     * `Scd2Ingest.processBatch` as calendar-month micro-batches — a
     * GLOBAL time split, so each user's events arrive in time order and
@@ -973,21 +973,20 @@ object StarAnalytics {
     */
   def scd2LookupServed(spark: SparkSession, dir: String): DataFrame =
     scd2LookupServedFrames(spark,
-      RetrievalAnalytics.storeKey(dir), Tables.events(spark, dir))
+      graft.sources.StoreCatalog.key(spark, dir), Tables.events(spark, dir))
 
-  private val scd2BuildLock = new Object
+  private def scd2Store(root: String) =
+    graft.streaming.Scd2Ingest.Scd2Store(root + "/intervals")
 
-  /** Build-once-serve-many resolution of the ingest-maintained dimension
-    * store — the `servedStores` memoization contract: `key` names the
-    * corpus content; same key ⇒ memoized store BY DESIGN.
+  /** Build-once resolution of the ingest-maintained dimension store for
+    * the corpus `key` names.
     */
   private[graft] def scd2LookupServedFrames(spark: SparkSession, key: String,
       events: => DataFrame): DataFrame = {
     val ev = events
-    val store = scd2BuildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_scd2_store", key)
-      val s = graft.streaming.Scd2Ingest.Scd2Store(base + "/intervals")
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
+    val store = scd2Store(
+      graft.sources.StoreCatalog.ensureBuilt(spark, "graft_scd2_store", key) { root =>
+        val s = scd2Store(root)
         val dimEvents = ev.filter(col("event_type") =!= "purchase")
         // calendar months are a deterministic, ts-monotone batch split:
         // later batches never deliver earlier events for any user
@@ -1005,9 +1004,7 @@ object StarAnalytics {
         if (months.isEmpty)
           graft.streaming.Scd2Ingest.processBatch(dimEvents, 0L, s)
         graft.streaming.Scd2Ingest.compact(spark, s)
-      }
-      s
-    }
+      })
     val dim = graft.streaming.Scd2Ingest.current(spark, store)
       .filter(col("valid_to").isNull || col("valid_from") < col("valid_to"))
       .select(col("user_id"), col("valid_from"), col("version"), col("state"))
@@ -1031,6 +1028,14 @@ object StarAnalytics {
     * tier's own `mergedRows` (one definition, so composed-at-read ≡
     * landed is structural), never written.
     *
+    * Dispatch: when the dimension's whole history is at most ONE
+    * calendar month (the registry corpora), the landed base would be
+    * empty and the compose a strict superset of the rebuild's work, so
+    * the entry runs the in-plan rebuild ([[scd2LookupOn]]) and touches no
+    * store. Only a multi-month history takes the compose
+    * ([[scd2LookupLiveCompose]]). Both arms are law-pinned to the same
+    * rows (`Scd2LiveSpec`), so the dispatch changes cost, never output.
+    *
     * Bit-exactness: `Scd2LiveSpec` pins liveCurrent(prefix store,
     * remainder delta) ≡ the batch rebuild over all events for EVERY
     * prefix split, so this entry equals [[scd2Lookup]] frame-for-frame
@@ -1043,7 +1048,7 @@ object StarAnalytics {
     */
   def scd2LookupLive(spark: SparkSession, dir: String): DataFrame =
     scd2LookupLiveFrames(spark,
-      RetrievalAnalytics.storeKey(dir) + "_livebase", Tables.events(spark, dir))
+      graft.sources.StoreCatalog.key(spark, dir) + "_livebase", Tables.events(spark, dir))
 
   private[graft] def scd2LookupLiveFrames(spark: SparkSession, key: String,
       events: => DataFrame): DataFrame = {
@@ -1084,10 +1089,9 @@ object StarAnalytics {
       ev: DataFrame, dimEvents: DataFrame,
       months: Array[Any]): DataFrame = {
     val baseMonths = months.dropRight(1)
-    val store = scd2BuildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_scd2_store", key)
-      val s = graft.streaming.Scd2Ingest.Scd2Store(base + "/intervals")
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
+    val store = scd2Store(
+      graft.sources.StoreCatalog.ensureBuilt(spark, "graft_scd2_store", key) { root =>
+        val s = scd2Store(root)
         baseMonths.zipWithIndex.foreach { case (m, i) =>
           graft.streaming.Scd2Ingest.processBatch(
             dimEvents.filter(date_trunc("month", col("ts")) === lit(m)),
@@ -1099,9 +1103,7 @@ object StarAnalytics {
           graft.streaming.Scd2Ingest.processBatch(
             dimEvents.filter(lit(false)), 0L, s)
         graft.streaming.Scd2Ingest.compact(spark, s)
-      }
-      s
-    }
+      })
     val deltaId = math.max(baseMonths.length.toLong, 1L)
     val delta =
       if (months.isEmpty) dimEvents

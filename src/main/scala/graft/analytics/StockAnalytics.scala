@@ -486,22 +486,17 @@ object StockAnalytics {
   // ---- ticks_store_scan — the TickStore physical-layout read path ------
   /** Reads through the date-partitioned, symbol-sorted TickStore layout
     * (the covering-index analog, SURVEY.md §4): the store is written once
-    * per JVM per sf dir (testdata is immutable, so the layout content is
-    * deterministic), then the query filters on the partition column —
+    * per sf dir content ([[graft.sources.StoreCatalog]]), then the query
+    * filters on the partition column —
     * static partition pruning drops 20 of the 30 day-partitions before
     * any IO — and on symbol, which the within-partition sort turns into
     * row-group min/max skips. Aggregates one row per surviving day.
     */
-  private val storeWritten = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
   def ticksStoreScan(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_tick_store",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    storeWritten.getOrElseUpdate(path, {
-      graft.sources.TickStore.write(Tables.ticks(spark, dir), path)
-      true
-    })
-    graft.sources.TickStore.read(spark, path)
+    val root = graft.sources.StoreCatalog.ensureBuilt(spark, "graft_tick_store",
+      graft.sources.StoreCatalog.key(spark, dir))(
+      root => graft.sources.TickStore.write(Tables.ticks(spark, dir), root + "/ticks"))
+    graft.sources.TickStore.read(spark, root + "/ticks")
       .filter(col("tick_date").between(
         lit("2024-01-10").cast("date"), lit("2024-01-19").cast("date"))
         && col("symbol") === lit(Sym))

@@ -643,39 +643,26 @@ object TextAnalytics {
     */
   private def removedSet(spark: SparkSession, dir: String): DataFrame =
     graft.dedup.Dedup
-      .storedPairs(spark, RetrievalAnalytics.storeKey(dir),
+      .storedPairs(spark, graft.sources.StoreCatalog.key(spark, dir),
         Tables.documents(spark, dir))
       .select(col("doc_id_2").as("doc_id")).distinct()
-
-  private val contamStoreLock = new Object
 
   /** The benchmark-contaminated doc-id set read from a persisted store —
     * the r19 demotion completing [[sourceProfile]]'s pair: its removal
     * half already reads [[removedSet]]'s edge store, but its `contam`
     * half still re-ran the in-plan [[decontam]] gram explode +
     * benchmark join per read just to derive this id set. The store IS
-    * `decontam`'s flagged ids written once per corpus key
-    * (`_SUCCESS`-gated, [[graft.sources.StoreCatalog]] protocol), so
+    * `decontam`'s flagged ids written once per corpus key, so
     * the set is bit-identical and the oracle is unchanged
     * (`DedupStoreConsumersSpec` pins the store-fed entry against the
     * in-plan-contam spelling frame-for-frame); `decontam` itself stays
-    * the spec-pinned in-plan reference derivation. Build-once contract
-    * (as every store under this key): the key names corpus CONTENT —
-    * content changing under the same path requires a new key or store
-    * wipe, the serving tier's standing staleness rule.
+    * the spec-pinned in-plan reference derivation.
     */
   private[graft] def storedContamIds(spark: SparkSession,
-      dir: String): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_contam_ids",
-      RetrievalAnalytics.storeKey(dir))
-    contamStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        decontam(spark, dir).select(col("doc_id")).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-    }
-    spark.read.parquet(path)
-  }
+      dir: String): DataFrame =
+    graft.sources.StoreCatalog.parquet(spark, "graft_contam_ids",
+      graft.sources.StoreCatalog.key(spark, dir))(
+      decontam(spark, dir).select(col("doc_id")))
 
   // ---- corpus_curation: the integrated training-data pipeline ----------
   /** Quality filter → near-dup removal → deterministic sample, reported as

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.Tables
+import graft.sources.StoreCatalog
 import graft.functions.TextFeatures._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -807,8 +808,6 @@ object Dedup {
 
   // ---- the materialized dedup tier: verified near-dup edge store --------
 
-  private val edgeStoreLock = new Object
-
   /** Build-once resolution of the persisted VERIFIED near-dup pair graph
     * — the [[graft.sources.LinkStore]] edges artifact applied to the
     * MinHash tier (the r13 review's first ask): [[dedupMinhashOn]]'s
@@ -819,26 +818,15 @@ object Dedup {
     * term the 100× probes measured as dominant (components 14.4 s,
     * ensemble 24.4 s re-running three screens).
     *
-    * Mechanics match `linkStores`: memoized on `key` (the `servedStores`
-    * contract — key names corpus CONTENT, derive via
-    * [[graft.analytics.RetrievalAnalytics.storeKey]] for directory
-    * corpora), built = the write COMMITTED (`_SUCCESS` via the Hadoop FS
-    * API — a build killed mid-write must rebuild, never serve a partial
-    * graph). Plain parquet, no bucketing: every consumer is a full-graph
+    * `key` names the corpus ([[StoreCatalog.key]] for a directory).
+    * Plain parquet, no bucketing: every consumer is a full-graph
     * reader (components/keep-best/screens), not a point-probe — near-dup
     * graphs are sparse, so the store is edge-sized, ≪ corpus.
     */
   private[graft] def storedPairs(spark: SparkSession, key: String,
-      docs: => DataFrame): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_dedup_edges", key)
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        dedupMinhashOn(shingleSets(docs)).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-    }
-    spark.read.parquet(path)
-  }
+      docs: => DataFrame): DataFrame =
+    StoreCatalog.parquet(spark, "graft_dedup_edges", key)(
+      dedupMinhashOn(shingleSets(docs)))
 
   /** [[dedupComponents]] off the persisted edge graph — zero
     * shingle/band/verify work per run; bit-identical because the store
@@ -846,7 +834,7 @@ object Dedup {
     */
   def dedupComponentsServed(spark: SparkSession, dir: String): DataFrame =
     componentsOn(storedPairs(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir)))
 
   /** [[dedupKeepBest]] off the persisted edge graph — same serving
@@ -854,7 +842,7 @@ object Dedup {
     */
   def dedupKeepBestServed(spark: SparkSession, dir: String): DataFrame =
     keepBestFrom(
-      storedPairs(spark, graft.analytics.RetrievalAnalytics.storeKey(dir),
+      storedPairs(spark, StoreCatalog.key(spark, dir),
         Tables.documents(spark, dir)),
       Tables.documents(spark, dir))
 
@@ -883,7 +871,7 @@ object Dedup {
     */
   def dedupComponentsLive(spark: SparkSession, dir: String): DataFrame =
     dedupComponentsLiveFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_livebase",
+      StoreCatalog.key(spark, dir) + "_livebase",
       Tables.documents(spark, dir))
 
   private[graft] def dedupComponentsLiveFrames(spark: SparkSession,
@@ -899,22 +887,22 @@ object Dedup {
     * production claim — one crawl increment ≈ the served row + one
     * micro-batch derivation — is measured, not argued (r14 Missing #4).
     */
+  /** The ingest tier's three artifacts under a `graft_dedup_ingest` root. */
+  private def ingestStores(base: String) = graft.streaming.DedupEdgeIngest.EdgeStores(
+    base + "/sets", base + "/bands", base + "/edges")
+
   private[graft] def dedupComponentsLiveSplit(spark: SparkSession,
       key: String, docs: => DataFrame,
       landed: Seq[org.apache.spark.sql.Column],
       delta: org.apache.spark.sql.Column): DataFrame = {
     val d = docs
-    val base = graft.sources.StoreCatalog.root("graft_dedup_ingest", key)
-    val store = graft.streaming.DedupEdgeIngest.EdgeStores(
-      base + "/sets", base + "/bands", base + "/edges")
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        landed.zipWithIndex.foreach { case (pred, r) =>
-          graft.streaming.DedupEdgeIngest.processBatch(
-            d.filter(pred), r.toLong, store)
-        }
+    val base = StoreCatalog.ensureBuilt(spark, "graft_dedup_ingest", key) { base =>
+      landed.zipWithIndex.foreach { case (pred, r) =>
+        graft.streaming.DedupEdgeIngest.processBatch(
+          d.filter(pred), r.toLong, ingestStores(base))
       }
     }
+    val store = ingestStores(base)
     componentsOn(graft.streaming.DedupEdgeIngest.liveEdges(
       spark, store, d.filter(delta), landed.size.toLong))
   }
@@ -1052,27 +1040,21 @@ object Dedup {
     */
   def dedupComponentsServedInc(spark: SparkSession, dir: String): DataFrame =
     dedupComponentsServedIncFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.documents(spark, dir))
 
   private[graft] def dedupComponentsServedIncFrames(spark: SparkSession,
       key: String, docs: => DataFrame): DataFrame = {
     val d = docs
-    val base = graft.sources.StoreCatalog.root("graft_dedup_ingest", key)
-    val store = graft.streaming.DedupEdgeIngest.EdgeStores(
-      base + "/sets", base + "/bands", base + "/edges")
-    val compPath = base + "/components"
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        (0 to 2).foreach { r =>
-          graft.streaming.DedupEdgeIngest.processBatch(
-            d.filter(col("doc_id") % 3 === r), r.toLong, store)
-          graft.streaming.DedupEdgeIngest.updateComponents(
-            spark, store, compPath, r.toLong)
-        }
+    val base = StoreCatalog.ensureBuilt(spark, "graft_dedup_ingest", key) { base =>
+      (0 to 2).foreach { r =>
+        graft.streaming.DedupEdgeIngest.processBatch(
+          d.filter(col("doc_id") % 3 === r), r.toLong, ingestStores(base))
+        graft.streaming.DedupEdgeIngest.updateComponents(
+          spark, ingestStores(base), base + "/components", r.toLong)
       }
     }
-    spark.read.parquet(s"$compPath/batch_id=2")
+    spark.read.parquet(s"$base/components/batch_id=2")
       .select("doc_id", "component_id", "is_canonical")
       .orderBy("doc_id")
   }
@@ -1102,37 +1084,33 @@ object Dedup {
     */
   def dedupComponentsServedIncDel(spark: SparkSession, dir: String): DataFrame =
     dedupComponentsServedIncDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incdelmap",
+      StoreCatalog.key(spark, dir) + "_incdelmap",
       Tables.documents(spark, dir))
 
   private[graft] def dedupComponentsServedIncDelFrames(spark: SparkSession,
       key: String, docs: => DataFrame): DataFrame = {
     val d = docs
-    val base = graft.sources.StoreCatalog.root("graft_dedup_ingest", key)
-    val store = graft.streaming.DedupEdgeIngest.EdgeStores(
-      base + "/sets", base + "/bands", base + "/edges")
-    val tombsPath = base + "/tombs"
-    val compPath = base + "/components"
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        Seq(0L, 1L).foreach { r =>
-          graft.streaming.DedupEdgeIngest.processBatch(
-            d.filter(col("doc_id") % 3 === r), r, store)
-          graft.streaming.DedupEdgeIngest.updateComponentsDel(
-            spark, store, tombsPath, compPath, r)
-        }
-        graft.streaming.DedupEdgeIngest.processTombstones(
-          d.filter(col("doc_id") % DocDelMod === DocDelRes)
-            .select(col("doc_id").as("dead_id")), 2L, tombsPath)
-        graft.streaming.DedupEdgeIngest.updateComponentsDel(
-          spark, store, tombsPath, compPath, 2L)
+    val base = StoreCatalog.ensureBuilt(spark, "graft_dedup_ingest", key) { base =>
+      val store = ingestStores(base)
+      val tombsPath = base + "/tombs"
+      val compPath = base + "/components"
+      Seq(0L, 1L).foreach { r =>
         graft.streaming.DedupEdgeIngest.processBatch(
-          d.filter(col("doc_id") % 3 === 2), 3L, store)
+          d.filter(col("doc_id") % 3 === r), r, store)
         graft.streaming.DedupEdgeIngest.updateComponentsDel(
-          spark, store, tombsPath, compPath, 3L)
+          spark, store, tombsPath, compPath, r)
       }
+      graft.streaming.DedupEdgeIngest.processTombstones(
+        d.filter(col("doc_id") % DocDelMod === DocDelRes)
+          .select(col("doc_id").as("dead_id")), 2L, tombsPath)
+      graft.streaming.DedupEdgeIngest.updateComponentsDel(
+        spark, store, tombsPath, compPath, 2L)
+      graft.streaming.DedupEdgeIngest.processBatch(
+        d.filter(col("doc_id") % 3 === 2), 3L, store)
+      graft.streaming.DedupEdgeIngest.updateComponentsDel(
+        spark, store, tombsPath, compPath, 3L)
     }
-    spark.read.parquet(s"$compPath/batch_id=3")
+    spark.read.parquet(s"$base/components/batch_id=3")
       .select("doc_id", "component_id", "is_canonical")
       .orderBy("doc_id")
   }
@@ -1147,17 +1125,9 @@ object Dedup {
     * (the `storedEntityMap` twin; built once beside the edge store).
     */
   private[graft] def storedDocComponents(spark: SparkSession, key: String,
-      docs: => DataFrame): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_dedup_edges",
-      key + "_components")
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        componentsOn(storedPairs(spark, key, docs)).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-    }
-    spark.read.parquet(path)
-  }
+      docs: => DataFrame): DataFrame =
+    StoreCatalog.parquet(spark, "graft_dedup_edges", key + "_components")(
+      componentsOn(storedPairs(spark, key, docs)))
 
   /** Tombstone deletion for the DEDUP graph tier — the
     * `entity_groups_served_del` symmetry on the MinHash side: documents
@@ -1187,7 +1157,7 @@ object Dedup {
     */
   def dedupComponentsServedDel(spark: SparkSession, dir: String): DataFrame =
     dedupComponentsServedDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.documents(spark, dir))
 
   private[graft] def dedupComponentsServedDelFrames(spark: SparkSession,
@@ -1196,21 +1166,11 @@ object Dedup {
     val pairs = storedPairs(spark, key, d)
     val comp  = storedDocComponents(spark, key, d)
       .select(col("doc_id"), col("component_id"), col("is_canonical"))
-    // the deletion batch lands beside the store and is read back — the
-    // serve path never sees the rule, only ids. Written ONCE per rule
-    // key under the store lock (r15 ADVICE: the unguarded overwrite
-    // raced concurrent readers of the same registry entry).
-    val tombPath = graft.sources.StoreCatalog.root("graft_dedup_edges",
-      key + "_tombstones")
-    edgeStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark,
-          Seq(s"$tombPath/batch_id=0")) {
-        d.filter(col("doc_id") % DocDelMod === DocDelRes)
-          .select(col("doc_id").cast("long").as("dead_id"))
-          .write.mode("overwrite").parquet(s"$tombPath/batch_id=0")
-      }
-    }
-    val dead = spark.read.parquet(tombPath).select("dead_id")
+    // the deletion batch lands beside the store, once per rule key, and
+    // is read back — the serve path never sees the rule, only ids
+    val dead = StoreCatalog.parquet(spark, "graft_dedup_edges", key + "_tombstones")(
+      d.filter(col("doc_id") % DocDelMod === DocDelRes)
+        .select(col("doc_id").cast("long").as("dead_id")))
     val affected = comp
       .join(broadcast(dead), col("doc_id") === col("dead_id"), "left_semi")
       .select(col("component_id").as("aff_id")).distinct()
@@ -1443,7 +1403,7 @@ object Dedup {
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     splitLeakageFrom(docs, storedPairs(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir), docs))
+      StoreCatalog.key(spark, dir), docs))
   }
 
   /** In-plan spelling — the scale probes and the demotion law feed the
@@ -1504,7 +1464,7 @@ object Dedup {
   def splitAssign(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     splitAssignFrom(docs, storedPairs(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir), docs))
+      StoreCatalog.key(spark, dir), docs))
   }
 
   /** In-plan spelling — probes and the demotion law. */
@@ -1728,7 +1688,7 @@ object Dedup {
     dedupEnsembleOn(Tables.documents(spark, dir),
       Tables.embeddings(spark, dir),
       lexPairsOf = _ => storedPairs(spark,
-        graft.analytics.RetrievalAnalytics.storeKey(dir),
+        StoreCatalog.key(spark, dir),
         Tables.documents(spark, dir)))
 
   /** @param semanticOf the semantic screen over the normed embedding

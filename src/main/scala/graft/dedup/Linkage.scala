@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.Tables
+import graft.sources.StoreCatalog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -958,39 +959,24 @@ object Linkage {
   private val NewRem = 3
 
   private val LinkBuckets = 8
-  private val buildLock = new Object
 
-  /** Build-once-serve-many store resolution — the `servedStores`
-    * memoization contract verbatim: `key` names the corpus CONTENT
-    * (derive via [[graft.analytics.RetrievalAnalytics.storeKey]] for
-    * directory corpora; probe/spec callers pass a key unique to their
-    * frames). Re-calling with the same key serves the memoized store BY
-    * DESIGN — that is the serve economics — so mutate the key when the
-    * corpus changes.
+  /** Build-once resolution of the linkage store for the corpus `key`
+    * names ([[StoreCatalog.key]] for a directory; probe and spec callers
+    * pass a key unique to their frames).
     */
   private[graft] def linkStores(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String = "id",
-      nameCol: String = "name"): graft.sources.LinkStore.Stores =
-    buildLock.synchronized {
-      val base = graft.sources.StoreCatalog.root("graft_link_store", key)
-      val s = graft.sources.LinkStore.Stores(s"link_keys_$key", base + "/edges")
-      // built = BOTH artifacts landed: the keys table exists AND the edges
-      // write COMMITTED (StoreCatalog's `_SUCCESS` rule). Write order is
-      // keys-then-edges, so a build killed mid-edges leaves the table but
-      // no `_SUCCESS`; a bare directory-exists check would then serve a
-      // partial pair graph to every *_served consumer forever (the
-      // stale-cache class the bigEvents probe cache documents).
-      val built = spark.catalog.tableExists(s.keysTable) &&
-        graft.sources.StoreCatalog.committed(spark, s.edgesPath)
-      if (!built) {
-        graft.sources.StoreCatalog.sweepTable(spark, s.keysTable)
-        val n = names
-        graft.sources.LinkStore.write(
-          deletionKeyIndex(n, idCol, nameCol),
-          fuzzyJoinOn(n, idCol, nameCol), s, LinkBuckets)
-      }
-      s
+      nameCol: String = "name"): graft.sources.LinkStore.Stores = {
+    val root = StoreCatalog.ensureBuilt(spark, "graft_link_store", key) { root =>
+      val n = names
+      graft.sources.LinkStore.write(
+        deletionKeyIndex(n, idCol, nameCol), fuzzyJoinOn(n, idCol, nameCol),
+        graft.sources.LinkStore.at(key, root, LinkBuckets))
     }
+    val s = graft.sources.LinkStore.at(key, root, LinkBuckets)
+    s.keys.attach(spark)
+    s
+  }
 
   /** Incremental linkage — `dedup_incremental`'s shape applied to the
     * fuzzy tier: a new crawl batch (id ≡ 3 mod 10) probes the PERSISTED
@@ -1008,7 +994,7 @@ object Linkage {
     */
   def fuzzyJoinIncremental(spark: SparkSession, dir: String): DataFrame =
     fuzzyJoinIncrementalFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   private[graft] def fuzzyJoinIncrementalFrames(spark: SparkSession, key: String,
@@ -1018,7 +1004,7 @@ object Linkage {
     val newKeyed = deletionKeyIndex(
       n.filter(col(idCol) % NewMod === NewRem), idCol, nameCol)
     graft.sources.LinkStore
-      .candidates(spark, st.keysTable, newKeyed, col("k_id") % NewMod =!= NewRem)
+      .candidates(spark, st.keys.name, newKeyed, col("k_id") % NewMod =!= NewRem)
       .withColumn("dist",
         levenshtein(col("new_name"), col("corpus_name")).cast("long"))
       // verify BEFORE distinct — the depth-1 trade (pairs share 1-2 keys)
@@ -1045,7 +1031,7 @@ object Linkage {
     */
   def entityGroupsServed(spark: SparkSession, dir: String): DataFrame =
     Dedup.componentsOn(
-      storedEdges(spark, graft.analytics.RetrievalAnalytics.storeKey(dir),
+      storedEdges(spark, StoreCatalog.key(spark, dir),
           Tables.supplier(spark, dir), "s_suppkey", "s_name")
         .select(col("a_id").as("doc_id_1"), col("b_id").as("doc_id_2")))
       .select(col("doc_id").as("s_suppkey"), col("component_id").as("entity_id"),
@@ -1058,7 +1044,7 @@ object Linkage {
     */
   def graphTrianglesServed(spark: SparkSession, dir: String): DataFrame =
     graphTrianglesOn(
-      storedEdges(spark, graft.analytics.RetrievalAnalytics.storeKey(dir),
+      storedEdges(spark, StoreCatalog.key(spark, dir),
           Tables.supplier(spark, dir), "s_suppkey", "s_name")
         .select(col("a_id"), col("b_id")))
 
@@ -1069,7 +1055,7 @@ object Linkage {
     * graph serving path reads a persisted derived map. A robustness
     * dashboard polls coreness far more often than the graph changes, so
     * the peel now runs ONCE at map build (the [[storedEntityMap]]
-    * pattern, `_SUCCESS`-gated) and every served read is a map scan.
+    * pattern, its own store) and every served read is a map scan.
     *
     * The map BUILDS via the h-index family — r15's A/B
     * (`link_coreness_hindex` 6.9 / 22.4 / 60.8 s vs the peel's
@@ -1105,20 +1091,15 @@ object Linkage {
   private[graft] def storedCorenessMap(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): DataFrame = {
     val st = linkStores(spark, key, names, idCol, nameCol)
-    val path = st.edgesPath.stripSuffix("/edges") + "/coreness"
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        // build path = the COUNTING form (r16 A/B, PLANS.md: beats the
-        // collect_list h-index 2.9×/6.2× at 1×/10× on the plain graph
-        // and ~8-10× on the planted-hub fixture, with O(1) state per
-        // (node, level) — no per-node arrays to straggle on a hub);
-        // converged-by-construction, preserving the r15-ADVICE assert
-        graphCorenessCappedCountingOn(spark.read.parquet(st.edgesPath)
-            .select(col("a_id"), col("b_id")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
+    StoreCatalog.parquet(spark, "graft_link_store", key + "_coreness") {
+      // build path = the COUNTING form (r16 A/B, PLANS.md: beats the
+      // collect_list h-index 2.9×/6.2× at 1×/10× on the plain graph
+      // and ~8-10× on the planted-hub fixture, with O(1) state per
+      // (node, level) — no per-node arrays to straggle on a hub);
+      // converged-by-construction, preserving the r15-ADVICE assert
+      graphCorenessCappedCountingOn(spark.read.parquet(st.edgesPath)
+        .select(col("a_id"), col("b_id")))
     }
-    spark.read.parquet(path)
   }
 
   /** [[graphKcore]] SERVED from the persisted coreness map — k-core
@@ -1128,7 +1109,7 @@ object Linkage {
     * Shares the in-plan entry's oracle verbatim.
     */
   def graphKcoreServed(spark: SparkSession, dir: String): DataFrame =
-    storedCorenessMap(spark, graft.analytics.RetrievalAnalytics.storeKey(dir),
+    storedCorenessMap(spark, StoreCatalog.key(spark, dir),
         Tables.supplier(spark, dir), "s_suppkey", "s_name")
       .select(col("s_suppkey"),
         (col("coreness") >= 2).as("core2"), (col("coreness") >= 3).as("core3"))
@@ -1143,7 +1124,7 @@ object Linkage {
     * affected-only recompute.
     */
   def graphCorenessServed(spark: SparkSession, dir: String): DataFrame =
-    storedCorenessMap(spark, graft.analytics.RetrievalAnalytics.storeKey(dir),
+    storedCorenessMap(spark, StoreCatalog.key(spark, dir),
         Tables.supplier(spark, dir), "s_suppkey", "s_name")
       .orderBy("s_suppkey")
 
@@ -1171,7 +1152,7 @@ object Linkage {
     */
   def entityGroupsServedInc(spark: SparkSession, dir: String): DataFrame =
     entityGroupsServedIncFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   /** The incremental linkage-ingest root: records land through
@@ -1179,7 +1160,7 @@ object Linkage {
     * fold per batch — entities ([[graft.streaming.LinkIngest
     * .updateEntities]]) and capped coreness ([[foldCorenessSnapshot]],
     * which reads the entity snapshot the same batch just folded). One
-    * `_GRAFT_BUILT` root; both `*_served_inc` entries read their own
+    * store root; both `*_served_inc` entries read their own
     * snapshot chain.
     */
   private def linkIncStores(spark: SparkSession, key: String,
@@ -1189,38 +1170,33 @@ object Linkage {
     // shipped with entities only; adding the coreness chain changed the
     // artifact set (_v2), r16 added the landed tombstone batch (_v3),
     // and r17 renumbered that batch to 3 and added the triangle chain
-    // (_v4) — a pre-existing `_GRAFT_BUILT` marker would serve a root
-    // missing the newer artifacts forever. Bump on shape change.
-    val base = graft.sources.StoreCatalog.root("graft_link_ingest",
-      key + "_v4")
-    val store = graft.streaming.LinkIngest.LinkStores(
-      base + "/keys", base + "/edges")
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        (0 to 2).foreach { r =>
-          graft.streaming.LinkIngest.processBatch(
-            n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
-          graft.streaming.LinkIngest.updateEntities(
-            spark, store, base + "/entities", r.toLong)
-          foldCorenessSnapshot(spark, store, base + "/entities",
-            base + "/coreness", r.toLong)
-          foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
-        }
-        // the registry takedown batch lands beside the chains — the
-        // read-side compose entry's deletion store. Numbered 3 — AFTER
-        // the last insert batch (0..2) — because the takedown logically
-        // post-dates it and processTombstones' contract says insert and
-        // delete batches share one replay/as-of numbering (r16 ADVICE:
-        // landing it as 0 made any future as-of read mis-order the
-        // delete; today's read composes all tombstone partitions
-        // unconditionally, so behavior is unchanged).
-        graft.streaming.DedupEdgeIngest.processTombstones(
-          n.filter(col(idCol) % DelMod === DelRes)
-            .select(col(idCol).cast("long").as("dead_id")),
-          3L, base + "/tombs")
+    // (_v4) — a root committed by older code would serve without the
+    // newer artifacts forever. Bump on shape change.
+    StoreCatalog.ensureBuilt(spark, "graft_link_ingest", key + "_v4") { base =>
+      val store = graft.streaming.LinkIngest.LinkStores(
+        base + "/keys", base + "/edges")
+      (0 to 2).foreach { r =>
+        graft.streaming.LinkIngest.processBatch(
+          n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
+        graft.streaming.LinkIngest.updateEntities(
+          spark, store, base + "/entities", r.toLong)
+        foldCorenessSnapshot(spark, store, base + "/entities",
+          base + "/coreness", r.toLong)
+        foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
       }
+      // the registry takedown batch lands beside the chains — the
+      // read-side compose entry's deletion store. Numbered 3 — AFTER
+      // the last insert batch (0..2) — because the takedown logically
+      // post-dates it and processTombstones' contract says insert and
+      // delete batches share one replay/as-of numbering (r16 ADVICE:
+      // landing it as 0 made any future as-of read mis-order the
+      // delete; today's read composes all tombstone partitions
+      // unconditionally, so behavior is unchanged).
+      graft.streaming.DedupEdgeIngest.processTombstones(
+        n.filter(col(idCol) % DelMod === DelRes)
+          .select(col(idCol).cast("long").as("dead_id")),
+        3L, base + "/tombs")
     }
-    base
   }
 
   /** The COMPACTED incremental linkage-ingest root — the r19
@@ -1245,33 +1221,28 @@ object Linkage {
   private def linkIncCompactedStores(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): String = {
     val n = names
-    val base = graft.sources.StoreCatalog.root("graft_link_ingest",
-      key + "_cpt_v1")
-    val store = graft.streaming.LinkIngest.LinkStores(
-      base + "/keys", base + "/edges")
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        (0 to 2).foreach { r =>
-          graft.streaming.LinkIngest.processBatch(
-            n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
-          graft.streaming.LinkIngest.updateEntities(
-            spark, store, base + "/entities", r.toLong)
-          foldCorenessSnapshot(spark, store, base + "/entities",
-            base + "/coreness", r.toLong)
-          foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
-        }
-        graft.streaming.DedupEdgeIngest.processTombstones(
-          n.filter(col(idCol) % DelMod === DelRes)
-            .select(col(idCol).cast("long").as("dead_id")),
-          3L, base + "/tombs")
-        graft.streaming.LinkIngest.compact(spark, store,
-          tombsPath = Some(base + "/tombs"),
-          entitiesChain = Some(base + "/entities"),
-          corenessChain = Some(base + "/coreness"),
-          trianglesChain = Some(base + "/triangles"))
+    StoreCatalog.ensureBuilt(spark, "graft_link_ingest", key + "_cpt_v1") { base =>
+      val store = graft.streaming.LinkIngest.LinkStores(
+        base + "/keys", base + "/edges")
+      (0 to 2).foreach { r =>
+        graft.streaming.LinkIngest.processBatch(
+          n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
+        graft.streaming.LinkIngest.updateEntities(
+          spark, store, base + "/entities", r.toLong)
+        foldCorenessSnapshot(spark, store, base + "/entities",
+          base + "/coreness", r.toLong)
+        foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
       }
+      graft.streaming.DedupEdgeIngest.processTombstones(
+        n.filter(col(idCol) % DelMod === DelRes)
+          .select(col(idCol).cast("long").as("dead_id")),
+        3L, base + "/tombs")
+      graft.streaming.LinkIngest.compact(spark, store,
+        tombsPath = Some(base + "/tombs"),
+        entitiesChain = Some(base + "/entities"),
+        corenessChain = Some(base + "/coreness"),
+        trianglesChain = Some(base + "/triangles"))
     }
-    base
   }
 
   private[graft] def entityGroupsServedIncFrames(spark: SparkSession,
@@ -1308,7 +1279,7 @@ object Linkage {
     */
   def entityGroupsServedIncDel(spark: SparkSession, dir: String): DataFrame = {
     val base = linkIncCompactedStores(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
     repairComponentsUnderDeletion(
         spark.read.parquet(s"$base/entities/batch_id=2")
@@ -1521,7 +1492,7 @@ object Linkage {
     */
   def graphCorenessServedInc(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedIncFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   private[graft] def graphCorenessServedIncFrames(spark: SparkSession,
@@ -1540,7 +1511,7 @@ object Linkage {
     */
   def graphKcoreServedInc(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedIncFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
       .select(col("s_suppkey"),
         (col("coreness") >= 2).as("core2"), (col("coreness") >= 3).as("core3"))
@@ -1557,7 +1528,7 @@ object Linkage {
     */
   def graphKcoreServedIncDel(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedIncDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
       .select(col("s_suppkey"),
         (col("coreness") >= 2).as("core2"), (col("coreness") >= 3).as("core3"))
@@ -1586,7 +1557,7 @@ object Linkage {
     */
   def graphCorenessServedIncDel(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedIncDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   private[graft] def graphCorenessServedIncDelFrames(spark: SparkSession,
@@ -1610,50 +1581,37 @@ object Linkage {
   private val DelMod = 7L
   private val DelRes = 3L
 
-  /** Land (once, `_SUCCESS`-gated under the build lock) and read back
+  /** Land (once, as its own store beside the link store) and read back
     * the corpus' tombstone batch for a deletion rule — the single
     * deletion store the entity, coreness and triangle deletion tiers
     * share (one batch per rule key; the serve paths never see the
     * rule, only ids).
     */
-  private[graft] def landedTombstones(spark: SparkSession,
-      st: graft.sources.LinkStore.Stores, names: => DataFrame,
-      idCol: String, delMod: Long = DelMod,
-      delRes: Long = DelRes): DataFrame = {
-    val tombPath = st.edgesPath.stripSuffix("/edges") +
-      (if (delMod == DelMod && delRes == DelRes) "/tombstones"
-       else s"/tombstones_m${delMod}r$delRes")
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark,
-          Seq(s"$tombPath/batch_id=0")) {
-        names.filter(col(idCol) % delMod === delRes)
-          .select(col(idCol).cast("long").as("dead_id"))
-          .write.mode("overwrite").parquet(s"$tombPath/batch_id=0")
-      }
+  private[graft] def landedTombstones(spark: SparkSession, key: String,
+      names: => DataFrame, idCol: String, delMod: Long = DelMod,
+      delRes: Long = DelRes): DataFrame =
+    StoreCatalog.parquet(spark, "graft_link_store",
+        if (delMod == DelMod && delRes == DelRes) key + "_tombstones"
+        else s"${key}_tombstones_m${delMod}r$delRes") {
+      names.filter(col(idCol) % delMod === delRes)
+        .select(col(idCol).cast("long").as("dead_id"))
     }
-    spark.read.parquet(tombPath).select("dead_id")
-  }
 
   /** The persisted ENTITY map beside the edge store: [[entityGroups]]'
-    * component assignment computed ONCE over the stored pair graph and
-    * written with the store's own `_SUCCESS` discipline. This is what
+    * component assignment computed ONCE over the stored pair graph.
+    * This is what
     * makes deletion a BOUNDED operation (see [[entityGroupsServedDel]])
     * — without it, every delete pays a full component recompute.
     */
   private[graft] def storedEntityMap(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): DataFrame = {
     val st = linkStores(spark, key, names, idCol, nameCol)
-    val path = st.edgesPath.stripSuffix("/edges") + "/entities"
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        Dedup.componentsOn(spark.read.parquet(st.edgesPath)
-            .select(col("a_id").as("doc_id_1"), col("b_id").as("doc_id_2")))
-          .select(col("doc_id").as("s_suppkey"),
-            col("component_id").as("entity_id"), col("is_canonical"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
+    StoreCatalog.parquet(spark, "graft_link_store", key + "_entities") {
+      Dedup.componentsOn(spark.read.parquet(st.edgesPath)
+          .select(col("a_id").as("doc_id_1"), col("b_id").as("doc_id_2")))
+        .select(col("doc_id").as("s_suppkey"),
+          col("component_id").as("entity_id"), col("is_canonical"))
     }
-    spark.read.parquet(path)
   }
 
   /** [[entityGroupsServed]] under DELETION — cashing in the
@@ -1689,7 +1647,7 @@ object Linkage {
     */
   def entityGroupsServedDel(spark: SparkSession, dir: String): DataFrame =
     entityGroupsServedDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   private[graft] def entityGroupsServedDelFrames(spark: SparkSession,
@@ -1698,12 +1656,11 @@ object Linkage {
     val n = names
     val st = linkStores(spark, key, n, idCol, nameCol)
     val entities = storedEntityMap(spark, key, n, idCol, nameCol)
-    // the deletion batch lands beside the index and is read back as a
-    // store — the serve path never sees the rule, only ids. Written
-    // ONCE per rule key under the build lock (r15 ADVICE: the previous
-    // per-invocation overwrite raced concurrent readers of the same
-    // registry entry, which could observe a half-written batch dir).
-    val dead = landedTombstones(spark, st, n, idCol)
+    // the deletion batch lands beside the index, ONCE per rule key, and
+    // is read back as a store — the serve path never sees the rule, only
+    // ids (r15 ADVICE: a per-invocation overwrite raced concurrent
+    // readers, which could observe a half-written batch dir)
+    val dead = landedTombstones(spark, key, n, idCol)
     // affected = entity ids with ≥1 tombstoned member (bounded by the
     // deletion volume; broadcast both the batch and the affected set)
     val affected = entities
@@ -2079,7 +2036,7 @@ object Linkage {
     */
   def graphCorenessServedDel(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
 
   /** `delMod`/`delRes` default to the oracle-checked registry rule; the
@@ -2095,7 +2052,7 @@ object Linkage {
     val n = names
     val st = linkStores(spark, key, n, idCol, nameCol)
     val corMap = storedCorenessMap(spark, key, n, idCol, nameCol)
-    val dead = landedTombstones(spark, st, n, idCol, delMod, delRes)
+    val dead = landedTombstones(spark, key, n, idCol, delMod, delRes)
     repairCorenessUnderDeletion(corMap,
         spark.read.parquet(st.edgesPath).select(col("a_id"), col("b_id")), dead)
       .orderBy("s_suppkey")
@@ -2170,7 +2127,7 @@ object Linkage {
     */
   def graphKcoreServedDel(spark: SparkSession, dir: String): DataFrame =
     graphCorenessServedDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name")
       .select(col("s_suppkey"),
         (col("coreness") >= 2).as("core2"), (col("coreness") >= 3).as("core3"))
@@ -2185,20 +2142,15 @@ object Linkage {
     * the diagnostics family's [[storedCorenessMap]] twin: the wedge
     * close (the 44.5 s term at the 100× probe) runs ONCE at map build,
     * and every served read is a map scan, repaired or folded
-    * incrementally below. `_SUCCESS`-gated, build-once per corpus key.
+    * incrementally below. Built once per corpus key.
     */
   private[graft] def storedTriangleMap(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): DataFrame = {
     val st = linkStores(spark, key, names, idCol, nameCol)
-    val path = st.edgesPath.stripSuffix("/edges") + "/triangles"
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        degreeTriangleMapOn(spark.read.parquet(st.edgesPath)
-            .select(col("a_id"), col("b_id")))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
+    StoreCatalog.parquet(spark, "graft_link_store", key + "_triangles") {
+      degreeTriangleMapOn(spark.read.parquet(st.edgesPath)
+        .select(col("a_id"), col("b_id")))
     }
-    spark.read.parquet(path)
   }
 
   /** LOCAL triangle/degree maintenance under DELETION — the r16
@@ -2267,7 +2219,7 @@ object Linkage {
     val n = names
     val st = linkStores(spark, key, n, idCol, nameCol)
     val triMap = storedTriangleMap(spark, key, n, idCol, nameCol)
-    val dead = landedTombstones(spark, st, n, idCol, delMod, delRes)
+    val dead = landedTombstones(spark, key, n, idCol, delMod, delRes)
     maintainTrianglesUnderDeletion(triMap,
       spark.read.parquet(st.edgesPath).select(col("a_id"), col("b_id")), dead)
   }
@@ -2278,7 +2230,7 @@ object Linkage {
     */
   def graphTrianglesServedDel(spark: SparkSession, dir: String): DataFrame =
     triangleRankingFrom(trianglesRepairedFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   val graphTrianglesServedDelSql: String = graphTrianglesSqlOver(
@@ -2291,7 +2243,7 @@ object Linkage {
     */
   def graphClusteringCoeffServedDel(spark: SparkSession, dir: String): DataFrame =
     clusteringFrom(trianglesRepairedFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   val graphClusteringCoeffServedDelSql: String = graphClusteringCoeffSqlOver(
@@ -2370,13 +2322,13 @@ object Linkage {
     */
   def graphTrianglesServedInc(spark: SparkSession, dir: String): DataFrame =
     triangleRankingFrom(trianglesIncSnapshot(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   /** [[graphClusteringCoeff]] from the same ingest-fresh snapshot. */
   def graphClusteringCoeffServedInc(spark: SparkSession, dir: String): DataFrame =
     clusteringFrom(trianglesIncSnapshot(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   private[graft] def trianglesIncSnapshot(spark: SparkSession, key: String,
@@ -2420,7 +2372,7 @@ object Linkage {
     */
   def graphTrianglesServedIncDel(spark: SparkSession, dir: String): DataFrame =
     triangleRankingFrom(trianglesIncDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   /** [[graphClusteringCoeff]] SERVED from the persisted
@@ -2435,7 +2387,7 @@ object Linkage {
     */
   def graphClusteringCoeffServed(spark: SparkSession, dir: String): DataFrame =
     clusteringFrom(storedTriangleMap(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      StoreCatalog.key(spark, dir),
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   /** [[graphClusteringCoeffServedInc]] with the takedown batch composed
@@ -2444,7 +2396,7 @@ object Linkage {
   def graphClusteringCoeffServedIncDel(spark: SparkSession,
       dir: String): DataFrame =
     clusteringFrom(trianglesIncDelFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_incmap",
+      StoreCatalog.key(spark, dir) + "_incmap",
       Tables.supplier(spark, dir), "s_suppkey", "s_name"))
 
   val registry: Map[String, ((SparkSession, String) => DataFrame, String)] = Map(

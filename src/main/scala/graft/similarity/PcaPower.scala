@@ -149,26 +149,15 @@ object PcaPower {
       .orderBy("bucket")
   }
 
-  private val buildLock = new Object
-
   /** The persisted trained component (i, w) beside the corpus' store
     * family — 64 rows of EXACT integers (the fixed-point design is what
-    * makes the parquet round-trip bit-exact), built once `_SUCCESS`-
-    * gated by the same 5-round fit the `embedding_pca` entry runs.
+    * makes the parquet round-trip bit-exact), built once by the same
+    * 5-round fit the `embedding_pca` entry runs.
     */
   private def storedComponent(spark: SparkSession, key: String,
-      emb: => DataFrame): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_pca_store", key) +
-      "/component"
-    buildLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        powerRounds(centeredFrame(emb), Rounds)
-          .coalesce(1).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-    }
-    spark.read.parquet(path)
-  }
+      emb: => DataFrame): DataFrame =
+    graft.sources.StoreCatalog.parquet(spark, "graft_pca_store", key)(
+      powerRounds(centeredFrame(emb), Rounds).coalesce(1))
 
   /** `embedding_pca_project` SERVED from the persisted component (the
     * r18 demotion class — the entry re-ran the full 5-round fit inside
@@ -183,7 +172,7 @@ object PcaPower {
     val emb = Tables.embeddings(spark, dir)
     projectHistogram(centeredFrame(emb),
       storedComponent(spark,
-        graft.analytics.RetrievalAnalytics.storeKey(dir), emb))
+        graft.sources.StoreCatalog.key(spark, dir), emb))
   }
 
   /** The same [[Rounds]] rounds mechanically unrolled into DuckDB CTEs

@@ -333,29 +333,25 @@ object PqAnn {
 
   private final case class PqBalStores(dimMapPath: String, codesPath: String,
       codebookPath: String)
-  private val balLock = new Object
 
   /** Build-once resolution of the BALANCED serving artifacts: the
     * variance-ranked dim map persisted BESIDE the codebook (the map is
     * part of the index — serving contiguous codes under a balanced
     * codebook, or vice versa, would silently mis-rank), plus the corpus
     * codes in the same packed two-longs/16 B-per-vector layout as the
-    * contiguous tier. `_SUCCESS`-gated per artifact; memoized on `key`
-    * (the `servedStores` contract — key names corpus content).
+    * contiguous tier. One store per corpus `key`.
     */
   private def pqBalStores(spark: SparkSession, key: String,
-      emb: => DataFrame): PqBalStores = balLock.synchronized {
-    val base = graft.sources.StoreCatalog.root("graft_pqbal_store", key)
-    val s = PqBalStores(base + "/dimmap", base + "/codes", base + "/codebook")
-    val built = Seq(s.dimMapPath, s.codesPath, s.codebookPath)
-      .forall(graft.sources.StoreCatalog.committed(spark, _))
-    if (!built) {
+      emb: => DataFrame): PqBalStores = {
+    def at(root: String) =
+      PqBalStores(root + "/dimmap", root + "/codes", root + "/codebook")
+    val root = graft.sources.StoreCatalog.ensureBuilt(spark, "graft_pqbal_store", key) { root =>
+      val s = at(root)
       val e = emb
       val tier = K256
       // the map persists FIRST and the codes derive from the read-back
-      // copy, so codes and map cannot drift even across a crashed build
-      balancedDimMap(e, tier).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s.dimMapPath)
+      // copy, so codes and map cannot drift
+      balancedDimMap(e, tier).coalesce(1).write.parquet(s.dimMapPath)
       val dm = spark.read.parquet(s.dimMapPath)
       val (enc, cb) = pqArtifactsFrom(subVectorsWithMap(e, dm), tier)
       enc.groupBy(col("vec_id")).agg(
@@ -363,11 +359,10 @@ object PqAnn {
             .as("codes_lo"),
           sum(expr("if(sub >= 8, shiftleft(cast(code as bigint), 8 * (sub - 8)), 0L)"))
             .as("codes_hi"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s.codesPath)
-      cb.coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s.codebookPath)
+        .write.parquet(s.codesPath)
+      cb.coalesce(1).write.parquet(s.codebookPath)
     }
-    s
+    at(root)
   }
 
   /** `knn_pq256_balanced` SERVED from persisted artifacts — the r14
@@ -393,7 +388,7 @@ object PqAnn {
     */
   def knnServedPqBalanced(spark: SparkSession, dir: String): DataFrame =
     knnServedPqBalancedFrames(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir),
+      graft.sources.StoreCatalog.key(spark, dir),
       Tables.embeddings(spark, dir))
 
   private[graft] def knnServedPqBalancedFrames(spark: SparkSession,

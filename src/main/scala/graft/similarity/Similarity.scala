@@ -1061,13 +1061,10 @@ object Similarity {
     pr.union(isolatedPr).orderBy("vec_id")
   }
 
-  private val prStoreLock = new Object
-
   /** Build-once resolution of the persisted embedding near-dup edge
     * graph — [[graft.dedup.Dedup.storedPairs]]' mechanics applied to the
     * cosine tier: [[dedupEmbeddingOn]]'s verified (vec_id_1, vec_id_2,
-    * cosine) pairs written ONCE per corpus key, `_SUCCESS`-gated via the
-    * Hadoop FS API. The pair scan (quadratic in the oracle-verifiable
+    * cosine) pairs written ONCE per corpus key. The pair scan (quadratic in the oracle-verifiable
     * baseline, banded in production) is the dominant term of every graph
     * consumer; edges are sparse, so the store is the cheap artifact.
     */
@@ -1079,16 +1076,8 @@ object Similarity {
     */
   private[graft] def storedEmbPairs(spark: SparkSession, key: String,
       e: => DataFrame,
-      pairsOf: DataFrame => DataFrame = dedupEmbeddingOn): DataFrame = {
-    val path = graft.sources.StoreCatalog.root("graft_emb_edges", key)
-    prStoreLock.synchronized {
-      graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        pairsOf(e).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      }
-    }
-    spark.read.parquet(path)
-  }
+      pairsOf: DataFrame => DataFrame = dedupEmbeddingOn): DataFrame =
+    graft.sources.StoreCatalog.parquet(spark, "graft_emb_edges", key)(pairsOf(e))
 
   /** [[docPagerank]] off the persisted embedding edge graph — the
     * production arc the r13 review asked to close: the rank iteration
@@ -1100,7 +1089,7 @@ object Similarity {
   def docPagerankServed(spark: SparkSession, dir: String): DataFrame =
     docPagerankFrom(emb(spark, dir),
       storedEmbPairs(spark,
-        graft.analytics.RetrievalAnalytics.storeKey(dir), emb(spark, dir)))
+        graft.sources.StoreCatalog.key(spark, dir), emb(spark, dir)))
 
   private def prIterSql(k: Int): String =
     s"""pr$k AS (

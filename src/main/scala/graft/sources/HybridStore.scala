@@ -30,23 +30,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object HybridStore {
 
-  /** Store locations: a catalog table for the bucketed postings, paths
-    * for the partitioned vector index + broadcastable centroid table.
+  /** Store locations under one store root: a catalog table for the
+    * bucketed postings, paths for the partitioned vector index +
+    * broadcastable centroid table.
     */
-  final case class Stores(postingsTable: String, vectorsPath: String,
+  final case class Stores(postings: StoreCatalog.Table, vectorsPath: String,
                           centroidsPath: String)
+
+  def at(key: String, root: String, buckets: Int): Stores =
+    Stores(StoreCatalog.Table(s"hybrid_postings_$key", root + "/postings", buckets, "term"),
+      root + "/vectors", root + "/centroids")
 
   /** One-shot build. `postings` = (term, doc_id, score); `vectors` =
     * (vec_id, v, n2, centroid_id); `centroids` = packed (centroid_id, cv).
     */
   def write(postings: DataFrame, vectors: DataFrame, centroids: DataFrame,
-            s: Stores, buckets: Int): Unit = {
-    postings.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "term")
-      .sortBy("term")
-      .format("parquet")
-      .saveAsTable(s.postingsTable)
+            s: Stores): Unit = {
+    s.postings.write(postings)
     writeVectors(vectors, s.vectorsPath)
     // K rows — one file, broadcast on read
     centroids.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s.centroidsPath)

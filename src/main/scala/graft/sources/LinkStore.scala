@@ -37,18 +37,18 @@ object LinkStore {
   /** Store locations: a catalog table for the bucketed key index, a
     * path for the verified edge parquet.
     */
-  final case class Stores(keysTable: String, edgesPath: String)
+  final case class Stores(keys: StoreCatalog.Table, edgesPath: String)
+
+  /** The two artifacts under one store root. */
+  def at(key: String, root: String, buckets: Int): Stores =
+    Stores(StoreCatalog.Table(s"link_keys_$key", root + "/keys", buckets, "bk"),
+      root + "/edges")
 
   /** One-shot build. `keyed` = (k_id, k_name, bk) for the full corpus;
     * `edges` = the verified pair graph over the same corpus.
     */
-  def write(keyed: DataFrame, edges: DataFrame, s: Stores, buckets: Int): Unit = {
-    keyed.write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "bk")
-      .sortBy("bk")
-      .format("parquet")
-      .saveAsTable(s.keysTable)
+  def write(keyed: DataFrame, edges: DataFrame, s: Stores): Unit = {
+    s.keys.write(keyed)
     edges.write.mode(SaveMode.Overwrite).parquet(s.edgesPath)
   }
 

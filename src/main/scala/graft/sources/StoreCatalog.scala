@@ -1,117 +1,140 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The house build-once store protocol, written ONCE (r14 verdict's
-  * polish ask): every serving tier persists derived artifacts under
-  * `java.io.tmpdir/<group>/<key>` and gates the build on a commit
-  * marker — the artifact write's own `_SUCCESS` for single-writer
-  * parquet stores, an explicit `_GRAFT_BUILT` root marker for
-  * multi-artifact builds (created only after every artifact landed),
-  * or catalog registration for managed tables (which commits after the
-  * location write). Centralizing the checks also retires the repo's
-  * last `java.io.File` existence probes: every check here goes through
-  * the Hadoop FS API, because the warehouse/tmp need not be local (the
-  * r13 linkStores lesson, now applied uniformly — the served hybrid
-  * store's bare directory-exists checks were the remaining instances
-  * of the stale-partial-cache class the bigEvents probe cache
-  * documents).
+/** The one build-once store protocol. Every serving tier persists derived
+  * artifacts under `<java.io.tmpdir>/<group>/<key>` and reaches them only
+  * through this object:
+  *
+  *  - [[key]] names a source by CONTENT: a fingerprint of its canonical
+  *    path and of every file under it (relative name, length, mtime). A
+  *    dataset regenerated at the same path gets a new key, so it never
+  *    reads the stores of the data it replaced.
+  *  - [[ensureBuilt]] is the one gate, the commit-log rule of a streaming
+  *    sink: a root is served only once `_GRAFT_BUILT` landed, which
+  *    happens after `build` returned. A `_GRAFT_BUILDING` intent marker
+  *    is written first, so a killed build leaves a root that the next
+  *    call wipes and rebuilds instead of serving.
+  *  - [[Table]] is a bucketed catalog table whose files live under a
+  *    store root. The in-memory catalog forgets tables at JVM exit; the
+  *    files do not, so a new session re-attaches the committed files
+  *    instead of rebuilding them.
+  *
+  * Builds run under one JVM-wide reentrant lock (a build may resolve the
+  * stores it derives from). Every check goes through the Hadoop FS API,
+  * because the store root need not be local.
   */
 object StoreCatalog {
 
-  /** tmpdir root for a store `group/key`. */
-  def root(group: String, key: String): String =
+  private val lock = new Object
+
+  private val Built    = "_GRAFT_BUILT"
+  private val Building = "_GRAFT_BUILDING"
+
+  /** Store root for `group/key`. The tmpdir is read per call, so a caller
+    * may re-point it (the test suite and the benchmark use per-run roots).
+    */
+  private[graft] def root(group: String, key: String): String =
     sys.props("java.io.tmpdir").stripSuffix("/") + "/" + group + "/" + key
 
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
+  private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** True iff `dir`'s write COMMITTED — its `_SUCCESS` landed. A bare
-    * directory-exists check would serve a partially-written store to
-    * every consumer forever after a build killed mid-write.
+  /** Short hex fingerprint of the file or directory at `path`: its
+    * qualified path plus the relative name, length and mtime of every
+    * file under it. Distinct paths never share a key, and rewriting any
+    * file changes it.
     */
-  def committed(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir + "/_SUCCESS")
-    fs(spark, p).exists(p)
+  def key(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val pfs = fs(spark, p)
+    val top = pfs.makeQualified(p).toString
+    val files = pfs.listFiles(p, true)
+    val entries = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath.toString.stripPrefix(top)}|${f.getLen}|${f.getModificationTime}")
+      .toSeq.sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (top +: entries).foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+    md.digest().take(8).map("%02x".format(_)).mkString
   }
 
-  /** Run `build` unless every member of `dirs` committed. Callers hold
-    * their own store lock (single JVM writer); crash-safety comes from
-    * the per-directory `_SUCCESS` discipline — `build` must write the
-    * dirs in dependency order so a killed build re-runs.
-    */
-  def ensureCommitted(spark: SparkSession, dirs: Seq[String])(build: => Unit): Unit =
-    if (!dirs.forall(committed(spark, _))) build
-
-  /** Run `build` once per store ROOT under an explicit `_GRAFT_BUILT`
-    * marker — for multi-artifact builds (batch stores + folded maps)
-    * where no single `_SUCCESS` covers the set: a half-built root is
-    * wiped first, and the marker is created only after `build` returns,
-    * so replay never serves partial artifacts.
+  /** The root of store `group/key`, running `build(root)` first unless a
+    * build already committed there.
     *
-    * OWNERSHIP CONTRACT (r15 ADVICE): the root belongs EXCLUSIVELY to
-    * this build — every byte under it is written by `build` and may be
-    * deleted on recovery. Enforced, not just documented: a
-    * `_GRAFT_BUILDING` intent marker is written before `build` starts,
-    * and recovery only wipes roots carrying it (i.e. this protocol's
-    * own interrupted builds). A content-ful root with NEITHER marker
-    * was written by someone else — independently `_SUCCESS`-committed
-    * [[ensureCommitted]] artifacts, a mispointed path — and deleting
-    * it would be silent data loss, so the call fails loud instead.
+    * The root belongs to this protocol alone: `build` writes every byte
+    * under it, and recovery wipes a root only when it carries
+    * `_GRAFT_BUILDING` (this protocol's own interrupted build). A root
+    * with content but neither marker was written by someone else, or the
+    * key is mispointed; deleting it would be silent data loss, so the
+    * call fails instead. A `_GRAFT_BUILDING` beside `_GRAFT_BUILT` is the
+    * crash window between the two marker writes, and is cleared.
     */
-  def ensureBuilt(spark: SparkSession, rootDir: String)(build: => Unit): Unit = {
-    val marker   = new org.apache.hadoop.fs.Path(rootDir + "/_GRAFT_BUILT")
-    val building = new org.apache.hadoop.fs.Path(rootDir + "/_GRAFT_BUILDING")
-    val mfs = fs(spark, marker)
-    if (mfs.exists(marker)) {
-      // crash window between marker creation and intent-marker delete
-      // (r16 ADVICE): _GRAFT_BUILT is written only after `build`
-      // returned, so a surviving _GRAFT_BUILDING beside it is stale —
-      // clean it here rather than leaving state an operator must reason
-      // about manually.
-      if (mfs.exists(building)) mfs.delete(building, false)
+  def ensureBuilt(spark: SparkSession, group: String, key: String)(
+      build: String => Unit): String = lock.synchronized {
+    val dir = root(group, key)
+    val r = new Path(dir)
+    val rfs = fs(spark, r)
+    val built = new Path(r, Built)
+    val building = new Path(r, Building)
+    if (rfs.exists(built)) {
+      if (rfs.exists(building)) rfs.delete(building, false)
     } else {
-      val r = new org.apache.hadoop.fs.Path(rootDir)
-      if (mfs.exists(r)) {
-        val contents = mfs.listStatus(r)
-        require(contents.isEmpty || mfs.exists(building),
-          s"ensureBuilt: $rootDir is content-ful but carries neither " +
-            "_GRAFT_BUILT nor _GRAFT_BUILDING — it was not written by this " +
-            "protocol (exclusive-ownership contract); refusing to delete it. " +
-            "If it is an interrupted pre-intent-marker build (or a root this " +
-            s"store owned before the marker upgrade), delete $rootDir " +
-            "manually and re-run; if it is live data, the store key is " +
-            "mispointed")
-        if (contents.nonEmpty) mfs.delete(r, true)
+      if (rfs.exists(r)) {
+        val contents = rfs.listStatus(r)
+        require(contents.isEmpty || rfs.exists(building),
+          s"$dir has content but neither $Built nor $Building: it was not " +
+            "written by the store protocol, so it is not deleted. If it is " +
+            "an old store, delete it and re-run; otherwise the key is mispointed")
+        if (contents.nonEmpty) rfs.delete(r, true)
       }
-      mfs.create(building, true).close() // intent: root is now ours to wipe
-      build
-      mfs.create(marker, true).close()
-      mfs.delete(building, false)
+      rfs.create(building, true).close()
+      build(dir)
+      rfs.create(built, true).close()
+      rfs.delete(building, false)
     }
+    dir
   }
 
-  /** Clear the way for a managed catalog TABLE rebuild: the catalog is
-    * per-JVM but the warehouse directory persists, so a prior process
-    * may have left the table's LOCATION behind with no catalog entry —
-    * which `saveAsTable` refuses — or a build died between location
-    * write and registration. Drop the entry and sweep the location.
+  /** A one-artifact store: `df` written once under root `group/key`,
+    * read back.
     */
-  def sweepTable(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val staleLoc = new org.apache.hadoop.fs.Path(warehouse, table)
-    val wfs = fs(spark, staleLoc)
-    if (wfs.exists(staleLoc)) wfs.delete(staleLoc, true)
+  def parquet(spark: SparkSession, group: String, key: String)(
+      df: => DataFrame): DataFrame = {
+    val dir = ensureBuilt(spark, group, key)(r => df.write.parquet(r + "/data"))
+    spark.read.parquet(dir + "/data")
   }
 
-  /** [[sweepTable]] + `build` (which must end in `saveAsTable(table)`),
-    * gated on catalog registration — the single-table store shape.
+  /** A catalog table bucketed and bucket-sorted on `by`, with its files
+    * at `path` under a store root. [[write]] runs inside the root's
+    * build; [[attach]] resolves the table in any session after it.
     */
-  def ensureTable(spark: SparkSession, table: String)(build: => Unit): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      sweepTable(spark, table)
-      build
+  final case class Table(name: String, path: String, buckets: Int, by: String) {
+
+    def write(df: DataFrame): Unit = {
+      df.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
+      df.write.mode("overwrite").bucketBy(buckets, by).sortBy(by).format("parquet")
+        .option("path", path).saveAsTable(name)
     }
+
+    /** The table name, registering the committed files with the same
+      * bucketing when this session's catalog lacks the table or points it
+      * elsewhere. Spark requires the column list for a bucketed table, so
+      * it is read from the files.
+      */
+    def attach(spark: SparkSession): String = lock.synchronized {
+      val loc = { val p = new Path(path); fs(spark, p).makeQualified(p) }
+      val catalog = spark.sessionState.catalog
+      val id = TableIdentifier(name)
+      if (!catalog.tableExists(id) ||
+          new Path(catalog.getTableMetadata(id).location) != loc) {
+        spark.sql(s"DROP TABLE IF EXISTS $name")
+        spark.sql(s"CREATE TABLE $name (${spark.read.parquet(path).schema.toDDL}) " +
+          s"USING parquet CLUSTERED BY ($by) SORTED BY ($by) INTO $buckets BUCKETS " +
+          s"LOCATION '$loc'")
+      }
+      name
+    }
+  }
 }

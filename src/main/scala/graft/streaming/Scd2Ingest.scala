@@ -142,6 +142,10 @@ object Scd2Ingest {
   /** The live dimension table: latest generation per interval key, with
     * is_current derived — column-compatible with the batch
     * `scd2_intervals` entry.
+    *
+    * Rows come back in NO particular order: not by (user_id, version) as
+    * the batch entry presents them. A consumer that needs an order sorts
+    * (or, like the as-of lookups, distributes) for itself.
     */
   def current(spark: SparkSession, store: Scd2Store): DataFrame =
     resolve(spark.read.parquet(store.intervalsPath))
@@ -168,6 +172,8 @@ object Scd2Ingest {
     * Scale: the composition adds ZERO store mutation and the delta's
     * merge cost — O(touched users), the ingest tier's own bound; the
     * base store is never rewritten, only union-resolved at read.
+    *
+    * Rows come back in NO particular order, as from [[current]].
     */
   def liveCurrent(spark: SparkSession, store: Scd2Store, delta: DataFrame,
       deltaId: Long): DataFrame = {

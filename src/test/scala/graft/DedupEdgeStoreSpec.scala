@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup.Dedup
 import graft.similarity.Similarity
+import graft.sources.StoreCatalog
 import org.apache.spark.sql.functions._
 
 /** Laws for the materialized dedup tier (r13 verdict ask #1): the
@@ -17,7 +18,7 @@ class DedupEdgeStoreSpec extends SparkSpec {
     // but assert the edge sets directly too, it's the cheapest check)
     val derived = Dedup.dedupMinhash(spark, dir).collect().map(_.toString).sorted
     val stored = Dedup.storedPairs(spark,
-        graft.analytics.RetrievalAnalytics.storeKey(dir), Tables.documents(spark, dir))
+        StoreCatalog.key(spark, dir), Tables.documents(spark, dir))
       .collect().map(_.toString).sorted
     assert(derived.nonEmpty && stored.toSeq == derived.toSeq)
 
@@ -43,15 +44,16 @@ class DedupEdgeStoreSpec extends SparkSpec {
   test("a build killed mid-write (no _SUCCESS) is rebuilt, never served") {
     import spark.implicits._
     val key = "spec_partial_" + System.nanoTime()
-    val path = sys.props("java.io.tmpdir").stripSuffix("/") +
-      "/graft_dedup_edges/" + key
-    // fake a partial write: parquet part files land but the commit marker
-    // doesn't — the exact state a killed build leaves behind
+    val root = StoreCatalog.root("graft_dedup_edges", key)
+    // fake a killed build: the intent marker landed, then parquet part
+    // files without their commit marker — the exact state a build killed
+    // mid-write leaves behind
     Seq((999999L, 999998L, 1.0)).toDF("doc_id_1", "doc_id_2", "jaccard")
-      .write.mode("overwrite").parquet(path)
-    val fs = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
+      .write.mode("overwrite").parquet(root + "/data")
+    val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path + "/_SUCCESS"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(root + "/data/_SUCCESS"), false)
+    fs.create(new org.apache.hadoop.fs.Path(root + "/_GRAFT_BUILDING")).close()
     val docs = Tables.documents(spark, dir)
     val got = Dedup.storedPairs(spark, key, docs).collect().map(_.toString).sorted
     val want = Dedup.dedupMinhashOn(Dedup.shingleSets(docs))

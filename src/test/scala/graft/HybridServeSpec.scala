@@ -1,7 +1,7 @@
 package graft
 
 import graft.analytics.RetrievalAnalytics
-import graft.sources.HybridStore
+import graft.sources.{HybridStore, StoreCatalog}
 import org.apache.spark.sql.functions._
 
 /** Laws for the index-backed hybrid retrieval serving shape
@@ -32,7 +32,7 @@ class HybridServeSpec extends SparkSpec {
   test("lexical probe: the postings-store side of the candidate join plans with zero exchange") {
     // force the store to exist, then probe it the way the serving leg does
     RetrievalAnalytics.hybridRrfServed(spark, dir).queryExecution.executedPlan
-    val postings = spark.table(s"hybrid_postings_${graft.analytics.RetrievalAnalytics.storeKey(dir)}")
+    val postings = spark.table(s"hybrid_postings_${StoreCatalog.key(spark, dir)}")
     val qterms = postings.filter(col("doc_id") % 100 === 0)
       .limit(5).select(col("doc_id").as("query_id"), col("term"))
     val cands = postings.join(broadcast(qterms), "term")
@@ -123,8 +123,8 @@ class HybridServeSpec extends SparkSpec {
 
   test("store build is idempotent and the stores carry the documented layout") {
     RetrievalAnalytics.hybridRrfServed(spark, dir).queryExecution.executedPlan
-    val key = graft.analytics.RetrievalAnalytics.storeKey(dir)
-    val base = sys.props("java.io.tmpdir").stripSuffix("/") + "/graft_hybrid_store/" + key
+    val key = StoreCatalog.key(spark, dir)
+    val base = StoreCatalog.root("graft_hybrid_store", key)
     val vecs = spark.read.parquet(base + "/vectors")
     assert(vecs.columns.toSet == Set("vec_id", "v", "n2", "centroid_id"))
     // partition column really partitions: one assignment per vector

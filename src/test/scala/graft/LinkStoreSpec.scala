@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Linkage
-import graft.sources.LinkStore
+import graft.sources.{LinkStore, StoreCatalog}
 import org.apache.spark.sql.functions._
 
 /** Laws for the persisted linkage index (r12 review's #1 ask):
@@ -22,7 +22,7 @@ class LinkStoreSpec extends SparkSpec {
       .localCheckpoint()
     LinkStore.write(keyed,
       Linkage.fuzzyJoinOn(sup, "s_suppkey", "s_name"),
-      LinkStore.Stores("link_keys_spec", "/tmp/graft_link_store_spec/edges"), 4)
+      LinkStore.at("spec", StoreCatalog.root("graft_link_store", "spec"), 4))
     try {
       val isNew = col("k_id") % 10 === 3
       val cands = LinkStore.candidates(spark, "link_keys_spec",

@@ -80,7 +80,7 @@ class PqServedSpec extends SparkSpec {
     import spark.implicits._
     val none = Seq.empty[Long].toDF("dead_id")
     val viaEmpty = RetrievalAnalytics.knnServedPqFrames(spark,
-      RetrievalAnalytics.storeKey(dir), Tables.documents(spark, dir),
+      graft.sources.StoreCatalog.key(spark, dir), Tables.documents(spark, dir),
       Tables.embeddings(spark, dir), dead = Some(none))
       .collect().map(_.toString).toSeq
     val base = RetrievalAnalytics.knnServedPq(spark, dir)

@@ -82,7 +82,7 @@ class Scd2LiveSpec extends SparkSpec {
     assert(months.length <= 1,
       "registry corpus should dispatch to the rebuild — refresh this law if not")
     val composed = StarAnalytics.scd2LookupLiveCompose(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_livedispatchspec",
+      graft.sources.StoreCatalog.key(spark, dir) + "_livedispatchspec",
       ev, dimEvents, months).collect().map(_.toString).toSeq
     val rebuilt = StarAnalytics.scd2LookupOn(ev)
       .collect().map(_.toString).toSeq
